@@ -117,9 +117,6 @@ object Bench {
 
   val TimedPasses = 3
 
-  private def materialize(df: org.apache.spark.sql.DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.create()
@@ -132,24 +129,9 @@ object Bench {
     val results = names.map { name =>
       val fn = SparkEntry.queries(name)
       val sec =
-        try {
-          // drop caches a previous query left behind (e.g. ann_ivf's
-          // centroid tables) so queries are timed independently; a
-          // query's OWN caching still applies within each pass
-          spark.catalog.clearCache()
-          // GC fence: 18 queries' worth of dead blobs + shuffle rows
-          // fragment the old gen; without this, the next
-          // allocation-heavy query pays the collector's debt inside
-          // its timed passes
-          System.gc()
-          materialize(fn(spark, sfDir)) // warmup (discarded)
-          val passes = (1 to TimedPasses).map { _ =>
-            val t0 = System.nanoTime()
-            materialize(fn(spark, sfDir))
-            (System.nanoTime() - t0) / 1e9
-          }
-          passes.min
-        } catch {
+        try tools.Profile.timedPasses(spark, TimedPasses)(_ =>
+          tools.Profile.noop(fn(spark, sfDir))).min
+        catch {
           case e: Throwable =>
             System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
             failed ::= name

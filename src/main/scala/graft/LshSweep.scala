@@ -24,6 +24,11 @@ import org.apache.spark.sql.functions._
   */
 object LshSweep {
 
+  /** Cost of one operating point: the min of two timed passes. */
+  private def timed(spark: org.apache.spark.sql.SparkSession)(
+      f: => org.apache.spark.sql.DataFrame): Double =
+    tools.Profile.timedPasses(spark, 2)(_ => tools.Profile.noop(f)).min
+
   /** ANN-only sweep over a CLUSTERED corpus (VERDICT r14 #3: measure
     * the production PQ operating point instead of arguing it). The
     * testdata embeddings are near-uniform, so K ≥ 64 codebooks can't
@@ -35,15 +40,6 @@ object LshSweep {
     *   sbt "runMain graft.LshSweep ann [clusteredDir]"
     */
   def annOnly(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    def timed(f: => org.apache.spark.sql.DataFrame): Double = {
-      def pass(): Double = {
-        val t0 = System.nanoTime()
-        f.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      pass() // warmup
-      Seq(pass(), pass()).min
-    }
     def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("query_id", "vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -56,7 +52,7 @@ object LshSweep {
       spark.catalog.clearCache()
       val rec = recallOf(pairSet(
         operators.Similarity.annPq(spark, dir, codewords = k, rerank = 100)))
-      val secs = timed(
+      val secs = timed(spark)(
         operators.Similarity.annPq(spark, dir, codewords = k, rerank = 100))
       println(f"[sweep] ann_pq codewords=$k rerank=100 recall=$rec%.3f time=$secs%.2f s")
     }
@@ -64,7 +60,7 @@ object LshSweep {
       spark.catalog.clearCache()
       val rec = recallOf(pairSet(
         operators.Similarity.annIvf(spark, dir, nProbe = np)))
-      val secs = timed(operators.Similarity.annIvf(spark, dir, nProbe = np))
+      val secs = timed(spark)(operators.Similarity.annIvf(spark, dir, nProbe = np))
       println(f"[sweep] ann_ivf nprobe=$np recall=$rec%.3f time=$secs%.2f s")
     }
     // the composed IVF-PQ index (#161): nprobe × codewords grid — the
@@ -74,7 +70,7 @@ object LshSweep {
       spark.catalog.clearCache()
       val rec = recallOf(pairSet(operators.Similarity.annIvfPq(
         spark, dir, nProbe = np, rerank = 100, codewords = k)))
-      val secs = timed(operators.Similarity.annIvfPq(
+      val secs = timed(spark)(operators.Similarity.annIvfPq(
         spark, dir, nProbe = np, rerank = 100, codewords = k))
       println(f"[sweep] ann_ivfpq nprobe=$np codewords=$k rerank=100 " +
         f"recall=$rec%.3f time=$secs%.2f s")
@@ -97,15 +93,6 @@ object LshSweep {
     val timeDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val spark = GraftSession.create()
 
-    def timed(f: => org.apache.spark.sql.DataFrame): Double = {
-      def pass(): Double = {
-        val t0 = System.nanoTime()
-        f.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      pass() // warmup
-      Seq(pass(), pass()).min
-    }
     def pairSet(df: org.apache.spark.sql.DataFrame,
                 a: String, b: String): Set[(Long, Long)] =
       df.select(a, b).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -119,7 +106,7 @@ object LshSweep {
       val rec = recallOf(pairSet(
         operators.Dedup.dedupEmbeddingLsh(spark, recallDir, p, r),
         "vec_a", "vec_b"), exactEmb)
-      val secs = timed(operators.Dedup.dedupEmbeddingLsh(spark, timeDir, p, r))
+      val secs = timed(spark)(operators.Dedup.dedupEmbeddingLsh(spark, timeDir, p, r))
       println(f"[sweep] embedding planes=$p radius=$r recall=$rec%.3f time=$secs%.2f s")
     }
 
@@ -137,7 +124,7 @@ object LshSweep {
     Seq(4, 8, 16).foreach { b =>
       val rec = recallOf(pairSet(
         operators.Dedup.dedupMinhash(spark, recallDir, b), "doc_a", "doc_b"), jTruth)
-      val secs = timed(operators.Dedup.dedupMinhash(spark, timeDir, b))
+      val secs = timed(spark)(operators.Dedup.dedupMinhash(spark, timeDir, b))
       println(f"[sweep] minhash bands=$b recall=$rec%.3f time=$secs%.2f s (truth=${jTruth.size})")
     }
 
@@ -152,7 +139,7 @@ object LshSweep {
     Seq(2, 4, 8).foreach { c =>
       val rec = recallOf(pairSet(
         operators.Dedup.dedupSimhash(spark, recallDir, c), "doc_a", "doc_b"), hTruth)
-      val secs = timed(operators.Dedup.dedupSimhash(spark, timeDir, c))
+      val secs = timed(spark)(operators.Dedup.dedupSimhash(spark, timeDir, c))
       println(f"[sweep] simhash chunks=$c recall=$rec%.3f time=$secs%.2f s (truth=${hTruth.size})")
     }
 
@@ -163,14 +150,14 @@ object LshSweep {
       val rec = recallOf(pairSet(
         operators.Similarity.annLsh(spark, recallDir, p), "query_id", "vec_id"),
         annTruth)
-      val secs = timed(operators.Similarity.annLsh(spark, timeDir, p))
+      val secs = timed(spark)(operators.Similarity.annLsh(spark, timeDir, p))
       println(f"[sweep] ann_lsh planes=$p recall=$rec%.3f time=$secs%.2f s")
     }
     Seq(1, 2, 4).foreach { np =>
       val rec = recallOf(pairSet(
         operators.Similarity.annIvf(spark, recallDir, nProbe = np),
         "query_id", "vec_id"), annTruth)
-      val secs = timed(operators.Similarity.annIvf(spark, timeDir, nProbe = np))
+      val secs = timed(spark)(operators.Similarity.annIvf(spark, timeDir, nProbe = np))
       println(f"[sweep] ann_ivf nprobe=$np recall=$rec%.3f time=$secs%.2f s")
     }
     // --- PQ: codebook size and rerank depth vs brute force ---
@@ -178,7 +165,7 @@ object LshSweep {
       val rec = recallOf(pairSet(
         operators.Similarity.annPq(spark, recallDir, codewords = k, rerank = r),
         "query_id", "vec_id"), annTruth)
-      val secs = timed(
+      val secs = timed(spark)(
         operators.Similarity.annPq(spark, timeDir, codewords = k, rerank = r))
       println(f"[sweep] ann_pq codewords=$k rerank=$r recall=$rec%.3f time=$secs%.2f s")
     }

@@ -197,7 +197,9 @@ object SocketIngest {
   private val ingestSeq = new AtomicInteger(0)
 
   /** Rotating per-source file writer; NOT thread-safe — each
-    * connection/receiver owns one. */
+    * connection/receiver owns one. The file rotates only on a message
+    * boundary ([[endFrame]], [[writeLines]]): a message split across
+    * two files would reach the parser as two broken rows. */
   private final class Rotator(outDir: File, tag: String, rotateBytes: Long) {
     private var out: FileOutputStream = _
     private var tmp: File = _
@@ -211,11 +213,25 @@ object SocketIngest {
       written = 0L
     }
 
-    def write(bytes: Array[Byte], off: Int, len: Int): Unit = {
+    def write(bytes: Array[Byte], off: Int, len: Int): Unit = if (len > 0) {
       if (out == null) open()
       out.write(bytes, off, len)
       written += len
-      if (written >= rotateBytes) publish()
+    }
+
+    /** A whole message has been written: rotate if the file is full. */
+    def endFrame(): Unit = if (written >= rotateBytes) publish()
+
+    /** Appends one read of a newline-framed stream. The file can only
+      * rotate just after the read's last `\n`, and the bytes after it
+      * open the next file; a read with no `\n` never rotates, so a
+      * line longer than `rotateBytes` stays whole. */
+    def writeLines(bytes: Array[Byte], off: Int, len: Int): Unit = {
+      var cut = off + len
+      while (cut > off && bytes(cut - 1) != '\n') cut -= 1
+      write(bytes, off, cut - off)
+      if (cut > off) endFrame()
+      write(bytes, cut, off + len - cut)
     }
 
     /** Close + atomic-rename the current chunk (no-op when empty). */
@@ -336,7 +352,7 @@ object SocketIngest {
       try {
         var n = in.read(buf)
         while (n >= 0) {
-          if (n > 0) { rot.write(buf, 0, n); bytesCount.addAndGet(n.toLong) }
+          if (n > 0) { rot.writeLines(buf, 0, n); bytesCount.addAndGet(n.toLong) }
           n = in.read(buf)
         }
       } catch {
@@ -400,6 +416,7 @@ object SocketIngest {
               val head = s"${pkt.getLength} ".getBytes(StandardCharsets.US_ASCII)
               rot.write(head, 0, head.length)
               rot.write(pkt.getData, pkt.getOffset, pkt.getLength)
+              rot.endFrame()
               recvCount.incrementAndGet()
             } catch {
               case _: SocketException => // closed during stop()

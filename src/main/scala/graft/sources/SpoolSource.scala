@@ -230,9 +230,21 @@ object SpoolMicroBatchStream {
   def sealName(epochId: Long): String = f"epoch-$epochId%06d.sealed"
 }
 
+object SpoolOffset {
+  /** Serialized form of the empty watermark (no file consumed yet).
+    * The offset log reads its lines back with `getLines`, which drops
+    * a trailing empty line, so an empty string would vanish from the
+    * checkpoint and every restart would fail on the source count. No
+    * spool file name (`*.gz`) or epoch mark (`e:` prefix) equals it,
+    * so non-empty watermarks keep their old serialized form. */
+  val Empty = "n:"
+  def fromJson(json: String): SpoolOffset =
+    new SpoolOffset(if (json == Empty) "" else json)
+}
+
 class SpoolOffset(val watermark: String)
     extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = watermark
+  override def json(): String = if (watermark.isEmpty) SpoolOffset.Empty else watermark
   override def equals(o: Any): Boolean = o match {
     case s: SpoolOffset => s.watermark == watermark
     case _ => false
@@ -287,7 +299,7 @@ class SpoolMicroBatchStream(path: String, required: StructType,
     if (w.startsWith(EpochPrefix)) w.drop(EpochPrefix.length).toLong else -1L
 
   override def initialOffset(): Offset = new SpoolOffset("")
-  override def deserializeOffset(json: String): Offset = new SpoolOffset(json)
+  override def deserializeOffset(json: String): Offset = SpoolOffset.fromJson(json)
 
   /** One consistent snapshot of "everything consumable right now". */
   private def snapshotLatest(): SpoolOffset = {

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.{GraftSession, SparkEntry, Tables}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -244,33 +243,6 @@ object Stress {
       s"($nVectors vectors, $nCenters planted centers, noise=$noise)")
   }
 
-  /** Max-over-tasks metrics, reset per query: a cap that stopped
-    * holding shows up here as a task whose peak memory or shuffle
-    * volume grows with corpus² instead of corpus. */
-  private class PeakListener extends SparkListener {
-    @volatile var peakMem = 0L
-    @volatile var maxShufRead = 0L
-    @volatile var maxShufWrite = 0L
-    // query-total shuffle bytes (sum over tasks): a slimmed shuffle
-    // key shows up HERE even when per-task maxima stay flat because
-    // the exchange is well-spread (the round-12 exact-substr check)
-    val totShufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    def reset(): Unit = {
-      peakMem = 0L; maxShufRead = 0L; maxShufWrite = 0L
-      totShufWrite.set(0L)
-    }
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        peakMem = math.max(peakMem, m.peakExecutionMemory)
-        maxShufRead = math.max(maxShufRead, m.shuffleReadMetrics.totalBytesRead)
-        maxShufWrite = math.max(maxShufWrite, m.shuffleWriteMetrics.bytesWritten)
-        totShufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        ()
-      }
-    }
-  }
-
   def sweep(spark: SparkSession, dir: String,
             subset: Option[Set[String]] = None): Unit = {
     // subset corpora (e.g. the ×100 events-only gen) carry only the
@@ -282,37 +254,26 @@ object Stress {
       ).map(_.toString).getOrElse("-")
     println(s"[stress] corpus: documents=${tryCount("documents")} " +
       s"lineitem=${tryCount("lineitem")} events=${tryCount("events")}")
-    val listener = new PeakListener
-    spark.sparkContext.addSparkListener(listener)
     var failed = List.empty[String]
     SweepQueries.filter(q => subset.forall(_.contains(q))).foreach { name =>
       try {
+        // One timed pass of the same noop-format write Bench uses:
+        // count() would let Catalyst drop final sorts and prune
+        // columns, so the timed plan (and the task peaks below) would
+        // be lighter than the benchmarked one. The row count comes
+        // from a separate untimed pass, after the profile, so its
+        // lighter tasks cannot inflate the reported peaks. The total
+        // shuffle write is a sum over tasks: a slimmed shuffle key
+        // shows up there even when per-task maxima stay flat.
         val fn = SparkEntry.queries(name)
-        fn(spark, dir).write.format("noop").mode("overwrite").save() // warmup
-        System.gc()
-        listener.reset()
-        // Time the same noop-format write Bench uses: count() would let
-        // Catalyst drop final sorts and prune columns, so the timed plan
-        // (and the task peaks below) would be lighter than the
-        // benchmarked one. The row count comes from a separate untimed
-        // pass so the printed line stays comparable to bench numbers.
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        // listener events post asynchronously (no public flush API);
-        // the peaks are diagnostics, a settle pause is enough. Snapshot
-        // them before the row-count pass so its (lighter) tasks can't
-        // inflate the reported write-plan peaks.
-        Thread.sleep(1000)
-        val (peakMem, shufR, shufW, totW) =
-          (listener.peakMem, listener.maxShufRead, listener.maxShufWrite,
-            listener.totShufWrite.get)
+        val r = Profile.run(spark, 1)(fn(spark, dir))
+        val st = r.pass(1)
         val rows = fn(spark, dir).count()
-        println(f"[stress] $name: $sec%.1f s, $rows rows, " +
-          f"taskPeakMem=${peakMem / 1048576} MiB, " +
-          f"maxTaskShufRead=${shufR / 1048576} MiB, " +
-          f"maxTaskShufWrite=${shufW / 1048576} MiB, " +
-          f"totalShufWrite=${totW / 1048576} MiB")
+        println(f"[stress] $name: ${r.seconds.head}%.1f s, $rows rows, " +
+          f"taskPeakMem=${st.peakMem / 1048576} MiB, " +
+          f"maxTaskShufRead=${st.maxTaskShuffleRead / 1048576} MiB, " +
+          f"maxTaskShufWrite=${st.maxTaskShuffleWrite / 1048576} MiB, " +
+          f"totalShufWrite=${st.shuffleWrite / 1048576} MiB")
       } catch {
         case e: Throwable =>
           println(s"[stress] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")

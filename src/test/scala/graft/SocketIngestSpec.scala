@@ -140,4 +140,74 @@ class SocketIngestSpec extends SparkSpec {
     // file is arrival order; compare as multisets of byte strings)
     assert(frames.map(_.toSeq).toSet === sent.map(_.toSeq).toSet)
   }
+
+  test("TCP ingest: rotation cuts files only after a whole line") {
+    val dir = freshDir("tcp-rotate")
+    val ing = new sources.SocketIngest.TcpIngest(0, dir.getAbsolutePath,
+      rotateBytes = 100)
+    ing.start()
+    val lines = (1 to 40).map(i => f"<13>Feb  5 17:32:18 host-$i%02d rotate id=$i")
+    val bytes = lines.map(_ + "\n").mkString.getBytes("UTF-8")
+    try {
+      val s = new Socket("127.0.0.1", ing.boundPort)
+      s.setTcpNoDelay(true)
+      // writes that end mid-line, so reads cross the threshold inside a
+      // message
+      bytes.grouped(37).foreach { chunk =>
+        s.getOutputStream.write(chunk)
+        s.getOutputStream.flush()
+        Thread.sleep(2)
+      }
+      val deadline = System.currentTimeMillis() + 10000
+      while (ing.bytesIn < bytes.length && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      s.close()
+    } finally ing.stop()
+    val files = dir.listFiles().filter(_.getName.endsWith(".dat")).sortBy(_.getName)
+    assert(files.length > 1, "rotateBytes=100 must rotate")
+    val contents = files.map(f => new String(
+      java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+    contents.foreach(c => assert(c.endsWith("\n"), c))
+    assert(contents.flatMap(_.split("\n")).toSeq === lines)
+  }
+
+  test("UDP ingest: rotation cuts files only after a whole datagram frame") {
+    val dir = freshDir("udp-rotate")
+    val ing = new sources.SocketIngest.UdpIngest(0, dir.getAbsolutePath,
+      rotateBytes = 50)
+    ing.start()
+    val sent = (1 to 20).map(i => f"<13>Feb  5 17:32:18 h udp-$i%02d")
+    try {
+      val sock = new DatagramSocket()
+      val addr = InetAddress.getByName("127.0.0.1")
+      sent.foreach { m =>
+        val d = m.getBytes("UTF-8")
+        sock.send(new DatagramPacket(d, d.length, addr, ing.boundPort))
+        Thread.sleep(2)
+      }
+      sock.close()
+      val deadline = System.currentTimeMillis() + 10000
+      while (ing.received < sent.length && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      assert(ing.received === sent.length.toLong)
+    } finally ing.stop()
+    val files = dir.listFiles().filter(_.getName.endsWith(".dat")).sortBy(_.getName)
+    assert(files.length > 1, "rotateBytes=50 must rotate")
+    // every file de-frames on its own: `<len> <bytes>` frames, no rest
+    val frames = files.toSeq.flatMap { f =>
+      val b = java.nio.file.Files.readAllBytes(f.toPath)
+      var p = 0
+      val out = Seq.newBuilder[String]
+      while (p < b.length) {
+        val sp = b.indexOf(' '.toByte, p)
+        assert(sp > p, s"${f.getName}: no length head at $p")
+        val len = new String(b, p, sp - p, "US-ASCII").toInt
+        assert(sp + 1 + len <= b.length, s"${f.getName}: frame cut at $p")
+        out += new String(b, sp + 1, len, "UTF-8")
+        p = sp + 1 + len
+      }
+      out.result()
+    }
+    assert(frames === sent)
+  }
 }

@@ -421,20 +421,29 @@ class SpoolSourceSpec extends SparkSpec {
     Option(dir.listFiles()).foreach(_.foreach(_.delete()))
     val out = new File(dir, "_drainlog").getAbsolutePath
     val cp = new File(dir, "_cp").getAbsolutePath
+    // an always-accepting transport: the drain log alone shows packing
+    val transport = new streaming.FilesystemTransport(
+      new File(dir, "_delivered").getAbsolutePath, Set.empty)
+    val retryDir = new File(dir, "_retry")
+    retryDir.mkdirs()
+    val maxCount = 4
+    def drain(maxSize: Long): Unit = {
+      val q = streaming.SpoolDrainStream.shipQuery(
+        spark, dir.getAbsolutePath, cp, out, transport,
+        retryDir.getAbsolutePath, maxCount, maxSize)
+      q.awaitTermination(60000)
+    }
+    // a first run over the still-empty spool must leave a checkpoint
+    // that later runs resume (its watermark is the empty string)
+    drain(Long.MaxValue)
     (1 to 9).foreach(i => writeGz(dir, f"r$i%03d.gz",
       record("g/a", s"s$i", Seq((f"$i%03d", "m" + "x" * 50, i.toLong)))))
     val sizes = dir.listFiles().filter(_.getName.endsWith(".gz"))
       .map(f => f.getName -> f.length()).toMap
     // caps chosen so neither bound alone explains the packing: at most
     // 4 records AND at most 3.5 record-sizes per batch
-    val maxCount = 4
     val maxSize = (sizes.values.max * 7) / 2
-    def drain(): Unit = {
-      val q = streaming.SpoolDrainStream.drainQuery(
-        spark, dir.getAbsolutePath, cp, out, maxCount, maxSize)
-      q.awaitTermination(60000)
-    }
-    drain()
+    drain(maxSize)
     val log1 = spark.read.parquet(out).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(log1.map(_._3).sum === 9L) // every record drained once
@@ -447,7 +456,7 @@ class SpoolSourceSpec extends SparkSpec {
     // micro-batch (checkpointed watermark), drained under the same caps
     (10 to 12).foreach(i => writeGz(dir, f"r$i%03d.gz",
       record("g/a", s"s$i", Seq((f"$i%03d", "m" + "x" * 50, i.toLong)))))
-    drain()
+    drain(maxSize)
     val log2 = spark.read.parquet(out).collect()
     assert(log2.map(r => r.getLong(2)).sum === 12L)
   }
