@@ -13,9 +13,8 @@ object Constants {
     * the excess discarded (constant.py:5). */
   val MaxMessageLength: Int = 1024 * 6
 
-  /** Sink buffer flush thresholds (constant.py:12-13). */
+  /** Sink buffer flush interval (constant.py:12). */
   val FlushTime: Int = 60
-  val FlushSize: Int = 1024 * 1024 * 4
 
   /** Max Firehose record size, post-compression (constant.py:14). */
   val MaxRecordSize: Int = 1024 * 1000

@@ -48,7 +48,6 @@ case class RelayConfig(
     spoolDir: String = System.getProperty("java.io.tmpdir"),
     /** Sink flush semantics (constant.py:12-17). */
     flushSeconds: Int = Constants.FlushTime,
-    flushBytes: Int = Constants.FlushSize,
     maxRecordSize: Int = Constants.MaxRecordSize,
     maxBatchCount: Int = Constants.MaxBatchCount,
     maxBatchSize: Int = Constants.MaxBatchSize) {

@@ -247,103 +247,22 @@ object VectorFunctions {
     0L
   }
 
-  /** Static so generated code can call it: the whole ADC scan for one
-    * vector in ONE compiled pass — for each query, Σ_m pdot[m, code_m]
-    * over the broadcast LUT. `cds` is the vector's code array (index =
-    * subspace m); `luts` one struct per query: (query_id, nq,
-    * pda ARRAY<STRUCT<m, cid, pdot>> sorted by (m, cid)). Long sums in
-    * subspace order — the exact adds the former (m, cid)-join +
-    * SUM(pdot) aggregate performed, without fanning every code row out
-    * to queries × M join rows and re-aggregating them per (query,
-    * vector) across an exchange. */
-  def pqAdc(cds: ArrayData, luts: ArrayData): ArrayData = {
-    val m = cds.numElements()
-    val nQ = luts.numElements()
-    val out = new Array[Any](nQ)
-    var qi = 0
-    while (qi < nQ) {
-      val q = luts.getStruct(qi, 3)
-      val pda = q.getArray(2)
-      var adot = 0L
-      var mi = 0
-      while (mi < m) {
-        adot += sortedPairLookup(pda, mi.toLong, cds.getLong(mi))
-        mi += 1
-      }
-      out(qi) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](q.getLong(0), q.getLong(1), adot))
-      qi += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  /** Per-vector codeword-reconstructed norm: Σ_m cn[m, code_m] over
-    * the broadcast (m, cid, cn) table — the ncode aggregate's algebra
-    * as one in-row fold. */
-  def pqCodesNorm(cds: ArrayData, cna: ArrayData): Long = {
-    var s = 0L
-    var mi = 0
-    while (mi < cds.numElements()) {
-      s += sortedPairLookup(cna, mi.toLong, cds.getLong(mi))
-      mi += 1
-    }
-    s
-  }
-
-  /** The one-pass ADC scan as an expression (codegen'd static call,
-    * the [[EvalHitsL]] pattern). */
-  case class PqAdcL(cds: Expression, luts: Expression)
-      extends BinaryExpression {
-    override def left: Expression = cds
-    override def right: Expression = luts
-    override def dataType: DataType = {
-      import org.apache.spark.sql.types._
-      ArrayType(StructType(Seq(
-        StructField("query_id", LongType, nullable = false),
-        StructField("nq", LongType, nullable = false),
-        StructField("adot", LongType, nullable = false))),
-        containsNull = false)
-    }
-    override def nullSafeEval(a: Any, b: Any): Any =
-      pqAdc(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) =>
-        s"graft.functions.VectorFunctions$$.MODULE$$.pqAdc($a, $b)")
-    override protected def withNewChildrenInternal(
-        l: Expression, r: Expression): PqAdcL = copy(cds = l, luts = r)
-  }
-
-  /** The reconstructed-norm fold as an expression. */
-  case class PqCodesNormL(cds: Expression, cna: Expression)
-      extends BinaryExpression {
-    override def left: Expression = cds
-    override def right: Expression = cna
-    override def dataType: DataType = LongType
-    override def nullSafeEval(a: Any, b: Any): Any =
-      pqCodesNorm(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) =>
-        s"graft.functions.VectorFunctions$$.MODULE$$.pqCodesNorm($a, $b)")
-    override protected def withNewChildrenInternal(
-        l: Expression, r: Expression): PqCodesNormL = copy(cds = l, cna = r)
-  }
-
-  def pq_adc_l(cds: Column, luts: Column): Column =
-    Exprs.toColumn(PqAdcL(Exprs.toExpression(cds), Exprs.toExpression(luts)))
-  def pq_codes_norm_l(cds: Column, cna: Column): Column =
-    Exprs.toColumn(PqCodesNormL(Exprs.toExpression(cds), Exprs.toExpression(cna)))
-
-  /** Static so generated code can call it: the IVF-PQ ADC scan for one
-    * vector — for each query PROBING this vector's list, qcdot +
-    * Σ_m pdot[m, code_m]. `luts` carries one struct per query:
-    * (query_id, nq, prb ARRAY<STRUCT<cid, qcdot>> sorted by cid,
+  /** Static so generated code can call it: the ADC scan for one
+    * vector of inverted list `cid`, in ONE compiled pass — for each
+    * query PROBING that list, qcdot + Σ pdot[m, code] over the
+    * vector's codes. `cds` holds one (m, code) struct per encoded
+    * subspace; `luts` one struct per query: (query_id, nq,
+    * prb ARRAY<STRUCT<cid, qcdot>> sorted by cid,
     * pda ARRAY<STRUCT<m, code, pdot>> sorted by (m, code)). A query
     * whose probe set misses `cid` emits NO row — the inner probe-join
     * semantics; within a probed list the adds are the exact algebra of
-    * the former (query_id, m, code) join + min(qcdot) + SUM(pdot)
-    * aggregate (qcdot is constant per (query, list)). */
+    * the (query_id, m, code) join + min(qcdot) + SUM(pdot) aggregate
+    * (qcdot is constant per (query, list)). Codes are looked up by
+    * their stored m, so a vector missing a subspace loses that one
+    * term, exactly as the join did. Plain PQ is the one-list case:
+    * cid 0 with a zero centroid, so qcdot is 0. */
   def ivfPqAdc(cds: ArrayData, cid: Long, luts: ArrayData): ArrayData = {
-    val m = cds.numElements()
+    val n = cds.numElements()
     val nQ = luts.numElements()
     val buf = scala.collection.mutable.ArrayBuffer.empty[Any]
     var qi = 0
@@ -364,10 +283,11 @@ object VectorFunctions {
       if (hit >= 0) {
         val pda = q.getArray(3)
         var adot = prb.getStruct(hit, 2).getLong(1)
-        var mi = 0
-        while (mi < m) {
-          adot += sortedPairLookup(pda, mi.toLong, cds.getLong(mi))
-          mi += 1
+        var i = 0
+        while (i < n) {
+          val mc = cds.getStruct(i, 2)
+          adot += sortedPairLookup(pda, mc.getLong(0), mc.getLong(1))
+          i += 1
         }
         buf += new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
           Array[Any](q.getLong(0), q.getLong(1), adot))
@@ -377,12 +297,15 @@ object VectorFunctions {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(buf.toArray)
   }
 
-  /** Static so generated code can call it: the encode-time
-    * reconstructed norm ‖x̂‖² = max(cn_coarse + 2·Σ xdot + Σ ccn, 1)
-    * from this vector's (list, codes) against the broadcast cross
-    * table `crx` (struct(cid, m, code, xdot, ccn) sorted by the first
-    * three) and centroid-norm table `cen` (struct(cid, cn) sorted by
-    * cid) — the nhat aggregate's exact long algebra, in-row. */
+  /** Static so generated code can call it: the reconstructed norm
+    * ‖x̂‖² = max(cn_coarse + 2·Σ xdot + Σ ccn, 1) from this vector's
+    * (list, (m, code) codes) against the broadcast cross table `crx`
+    * (struct(cid, m, code, xdot, ccn) sorted by the first three) and
+    * centroid-norm table `cen` (struct(cid, cn) sorted by cid) — the
+    * exact long algebra of the (cid, m, code) join + SUM it replaces,
+    * in-row. x̂ is an exact integer vector, so ‖x̂‖² ≥ 0; the max(·, 1)
+    * only guards the cosine division against a zero x̂. Codes are
+    * looked up by their stored m, like [[ivfPqAdc]]. */
   def ivfPqNcHat(cds: ArrayData, cid: Long, crx: ArrayData,
                  cen: ArrayData): Long = {
     var lo = 0
@@ -398,9 +321,11 @@ object VectorFunctions {
     }
     var xdot2 = 0L
     var ccn = 0L
-    var mi = 0
-    while (mi < cds.numElements()) {
-      val code = cds.getLong(mi)
+    var i = 0
+    while (i < cds.numElements()) {
+      val mc = cds.getStruct(i, 2)
+      val m = mc.getLong(0)
+      val code = mc.getLong(1)
       // binary search crx for (cid, m, code)
       var l = 0
       var h = crx.numElements() - 1
@@ -408,13 +333,13 @@ object VectorFunctions {
         val mid = (l + h) >>> 1
         val row = crx.getStruct(mid, 5)
         var c = java.lang.Long.compare(row.getLong(0), cid)
-        if (c == 0) c = java.lang.Long.compare(row.getLong(1), mi.toLong)
+        if (c == 0) c = java.lang.Long.compare(row.getLong(1), m)
         if (c == 0) c = java.lang.Long.compare(row.getLong(2), code)
         if (c == 0) { xdot2 += row.getLong(3); ccn += row.getLong(4); l = h + 1 }
         else if (c < 0) l = mid + 1
         else h = mid - 1
       }
-      mi += 1
+      i += 1
     }
     math.max(cn + 2L * xdot2 + ccn, 1L)
   }

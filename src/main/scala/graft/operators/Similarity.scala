@@ -45,6 +45,37 @@ object Similarity {
         col("nq"), col("nc"))
       .orderBy("query_id", "rank")
   }
+
+  /** The shared approximate-shortlist → exact-rerank tail of the
+    * quantized ANN variants (ann_int8, ann_pq, ann_ivfpq): rank the
+    * candidate frame (query_id, vec_id, adot, nq, nc) by its
+    * approximate cosine, keep `depth` candidates per query, re-score
+    * ONLY those against the full quantized corpus `v` and finish
+    * through [[rankTopK]]. `queries` is the (vec_id, q, nn) query
+    * frame. The shortlist is written in the row_number ≤ k idiom,
+    * which the TopKRewrite rule plans as the bounded-heap TopKPerKey
+    * operator; both rerank joins broadcast the ≤ queries·depth
+    * shortlist rows, so the corpus never shuffles. */
+  private[operators] def rerankTopK(approx: DataFrame, depth: Int,
+                                    v: DataFrame, queries: DataFrame): DataFrame = {
+    val wa = Window.partitionBy("query_id")
+      .orderBy(col("acos").desc, col("vec_id"))
+    val shortlist = approx
+      .withColumn("acos",
+        col("adot").cast("double") /
+          sqrt(col("nq").cast("double") * col("nc").cast("double")))
+      .withColumn("arank", row_number().over(wa))
+      .filter(col("arank") <= depth)
+      .select(col("query_id"), col("vec_id").as("cand_id"))
+    val qvec = queries.select(col("vec_id").as("query_id"), col("q").as("qq"),
+      col("nn").as("nq"))
+    val candq = shortlist.join(broadcast(qvec), "query_id")
+    rankTopK(v.join(broadcast(candq), col("vec_id") === col("cand_id"))
+      .select(col("query_id"), col("vec_id"),
+        graft.functions.VectorFunctions.dot_l(col("q"), col("qq")).as("dot"),
+        col("nq"), col("nn").as("nc")))
+  }
+
   val NumQueries = 5
   /** Planes sized so the EXPECTED BUCKET stays ~`target` vectors:
     * ceil(log2(n / target)), floored at the 4 planes the sub-10k test
@@ -526,15 +557,10 @@ object Similarity {
     * scale that is the 8×-smaller codes sidecar, not the vector
     * column — ranks by approximate int8 cosine, keeps `Int8Rerank`
     * candidates per query, and re-scores ONLY those against the full
-    * quantized vectors (both rerank joins broadcast the ≤
-    * queries×Int8Rerank candidate rows; the corpus never shuffles).
-    * The top-k filters are written in the row_number ≤ k idiom, which
-    * the TopKRewrite rule plans as the bounded-heap TopKPerKey
-    * operator — no per-query sort of the whole candidate set. Both
-    * ranking keys (approx and exact cosine) are single IEEE
-    * expressions computed identically by the DuckDB oracle, so the
-    * entire encode → approx-rank → rerank pipeline is verified end to
-    * end. */
+    * quantized vectors ([[rerankTopK]]). Both ranking keys (approx
+    * and exact cosine) are single IEEE expressions computed
+    * identically by the DuckDB oracle, so the entire encode →
+    * approx-rank → rerank pipeline is verified end to end. */
   def annInt8(spark: SparkSession, dir: String): DataFrame = {
     val c = int8Codes(spark, dir)
     val cq = c.filter(col("vec_id") < NumQueries)
@@ -544,24 +570,9 @@ object Similarity {
       .join(broadcast(cq), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         graft.functions.VectorFunctions.dot_l(col("c8"), col("q8")).as("adot"),
-        col("n8q"), col("n8").as("n8c"))
-      .withColumn("acos",
-        col("adot").cast("double") /
-          sqrt(col("n8q").cast("double") * col("n8c").cast("double")))
-    val wa = Window.partitionBy("query_id")
-      .orderBy(col("acos").desc, col("vec_id"))
-    val cand = approx.withColumn("arank", row_number().over(wa))
-      .filter(col("arank") <= Int8Rerank)
-      .select(col("query_id"), col("vec_id").as("cand_id"))
+        col("n8q").as("nq"), col("n8").as("nc"))
     val v = quantized(spark, dir)
-    val qvec = v.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"),
-        col("nn").as("nq"))
-    val candq = cand.join(broadcast(qvec), "query_id")
-    rankTopK(v.join(broadcast(candq), col("vec_id") === col("cand_id"))
-      .select(col("query_id"), col("vec_id"),
-        graft.functions.VectorFunctions.dot_l(col("q"), col("qq")).as("dot"),
-        col("nq"), col("nn").as("nc")))
+    rerankTopK(approx, Int8Rerank, v, v.filter(col("vec_id") < NumQueries))
   }
 
   val annInt8Sql: String =
@@ -817,36 +828,39 @@ object Similarity {
     * sampled, and the #130 recall gate pins the quality. */
   val PqTrainMod = 4
 
-  /** (vec_id, nn, m, sq, sn): the m-th 16-dim slice of each quantized
-    * vector with its sub-norm — M slim rows per vector, ONE frame for
-    * every training/encode/probe consumer, so all M codebooks train
-    * inside the same two Lloyd jobs instead of M separate k-means
-    * loops. */
-  private[operators] def subVectors(v: DataFrame): DataFrame =
-    v.select(col("vec_id"), col("nn"),
+  /** (…, m, sq, sn): the m-th 16-dim slice of each vector `q` with
+    * its sub-norm, every other column of `v` riding along ((vec_id,
+    * nn) for a quantized frame, (vec_id, cid) for residuals) — M slim
+    * rows per vector, ONE frame for every training/encode/probe
+    * consumer, so all M codebooks train inside the same two Lloyd
+    * jobs instead of M separate k-means loops. */
+  private[operators] def subVectors(v: DataFrame): DataFrame = {
+    val rest = v.columns.filter(_ != "q").map(col).toSeq
+    v.select(rest :+
       explode(expr(s"transform(sequence(0, ${PqSub - 1}), m -> " +
-        s"named_struct('m', m, 'sq', slice(q, m * $PqSubDim + 1, $PqSubDim)))")).as("s"))
-      .select(col("vec_id"), col("nn"),
-        col("s.m").as("m"), col("s.sq").as("sq"))
+        s"named_struct('m', m, 'sq', slice(q, m * $PqSubDim + 1, $PqSubDim)))")).as("s"): _*)
+      .select(rest :+ col("s.m").as("m") :+ col("s.sq").as("sq"): _*)
       .withColumn("sn", graft.functions.VectorFunctions.norm_sq_l(col("sq")))
+  }
 
-  /** Per-(vector, subspace) nearest codeword in `cw` (integer L2²,
-    * (d2, cid) tie-break). The ≤ M·K-row codebook collapses to one
+  /** Per-(vector, subspace) nearest codeword `code` in `cw` (integer
+    * L2², (d2, cid) tie-break), added to the sub-vector frame `sv`
+    * (training reads it as the cluster id, encoding as the code). The
+    * ≤ M·K-row codebook collapses to one
     * struct-array row PER SUBSPACE; the broadcast join on m attaches
     * the right codebook and the argmin runs as a compiled per-row
     * fold — no shuffle of the sub-vector frame ([[assignTo]]'s r22
     * map-only shape, which this mirrors per m: the former min-struct
     * groupBy re-shuffled all M·corpus sub-vector rows per training
     * iteration and per encode). */
-  private[operators] def pqAssign(sv: DataFrame, cw: DataFrame): DataFrame = {
+  private def pqAssign(sv: DataFrame, cw: DataFrame): DataFrame = {
     val caByM = cw.groupBy("m")
       .agg(collect_list(struct(col("cid"), col("cq"), col("cn"))).as("ca"))
     sv.join(broadcast(caByM), "m")
-      .select(col("vec_id"), col("m"),
-        graft.functions.VectorFunctions
-          .nearest_cid_l(col("sq"), col("sn"), col("ca")).as("cid"),
-        col("sq"), col("sn"))
-      .filter(col("cid").isNotNull)
+      .withColumn("code", graft.functions.VectorFunctions
+        .nearest_cid_l(col("sq"), col("sn"), col("ca")))
+      .drop("ca")
+      .filter(col("code").isNotNull)
   }
 
   /** Lloyd-trained PQ codebooks (m, cid, cq, cn): floor-average
@@ -877,7 +891,8 @@ object Similarity {
         col("sq").as("cq"), col("sn").as("cn"))
     for (it <- 1 to iters) {
       val mu = pqAssign(svTrain, cw)
-        .select(col("m"), col("cid"), posexplode(col("sq")).as(Seq("dim", "x")))
+        .select(col("m"), col("code").as("cid"),
+          posexplode(col("sq")).as(Seq("dim", "x")))
         .groupBy("m", "cid", "dim")
         .agg(sum("x").as("s"), count(lit(1)).as("cnt"))
         .select(col("m"), col("cid"), col("dim"),
@@ -888,7 +903,7 @@ object Similarity {
         .withColumn("cn", graft.functions.VectorFunctions.norm_sq_l(col("cq")))
         .select(col("m"), col("cid"), col("cq"), col("cn"))
       // pin ONLY the final table (round 12): the codebook's post-loop
-      // consumers (encode, ncode, LUT) must never re-run training, but
+      // consumers (encode, norm tables, LUT) must never re-run training, but
       // intermediate iterations have exactly ONE consumer — the next
       // assignment — so pinning them bought lineage truncation at the
       // price of a full checkpoint job per iteration (the job-count
@@ -901,121 +916,37 @@ object Similarity {
   }
 
   /** PQ ANN with asymmetric distance computation + exact rerank:
-    * encode the corpus to (vec_id, m, cid) codes, build each query's
-    * M·K-entry sub-dot lookup table, score every vector as
-    * Σ_m LUT[m, code_m] (the ADC approximation of the full dot
-    * product) against the codeword-reconstructed norm, keep the
-    * PqRerank-deep ADC shortlist per query, then re-score ONLY the
-    * shortlist against the full quantized vectors (the FAISS
-    * ADC+rerank recipe — #80 does the same over SQ8 codes).
+    * encode every vector to M codewords, score it against each
+    * query's M·K-entry sub-dot lookup table as Σ_m LUT[m, code_m]
+    * (the ADC approximation of the full dot product) over the
+    * codeword-reconstructed norm, keep the PqRerank-deep ADC shortlist
+    * per query, then re-score ONLY the shortlist against the full
+    * quantized vectors (the FAISS ADC+rerank recipe — #80 does the
+    * same over SQ8 codes).
     *
-    * Scale shape: the codebook and the per-query LUT are ≤ M·K and
-    * ≤ queries·M·K rows — both broadcast at any corpus size; the
-    * corpus-side frames are the M-rows-per-vector codes (slim
-    * integers, the M-byte sidecar — PQ's whole point is that the ADC
-    * scan never touches the vector column), the ADC aggregate
-    * map-side combines M rows per (query, vector), both ranks ride
-    * the row_number ≤ k idiom the TopKRewrite rule plans as a
-    * bounded-heap TopKPerKey, and the rerank joins broadcast the
-    * ≤ queries·PqRerank candidate rows — the corpus never shuffles.
-    * The oracle recomputes the identical integer pipeline, training
-    * included. */
+    * PQ is IVF-PQ (#161) with one inverted list (Jégou et al. 2011:
+    * ADC is IVFADC with a single coarse cell): under [[oneList]] the
+    * residual is the vector itself, so the residual codebooks are the
+    * plain PQ codebooks (same sub-vectors, same seed window), the
+    * query-centroid dot is 0, and build, encode, ADC scan, rerank and
+    * the persisted store ([[AnnIndex]]'s `pq` kind) are all #161's.
+    * The one difference from a standalone PQ fold is #161's
+    * max(‖x̂‖², 1) norm clamp, which only touches a vector whose
+    * codewords are all zero. The oracle recomputes the plain PQ
+    * pipeline, training included. */
   def annPq(spark: SparkSession, dir: String,
             codewords: Int = PqCodewords,
             rerank: Int = PqRerank): DataFrame = {
-    val a = pqArtifacts(spark, dir, codewords)
-    annPqQueryFrom(spark, dir, a, rerank)
+    annIvfPqQueryFrom(spark, dir,
+      ivfPqArtifactsFrom(quantized(spark, dir), oneList(spark), codewords),
+      rerank = rerank)
   }
 
-  /** The PQ index's build-side artifacts — exactly what a deployment
-    * persists once and queries many times (FAISS write_index): the
-    * trained codebooks, the M-codes-per-vector sidecar, and the
-    * codeword-reconstructed norms. [[annPq]] derives them in-query;
-    * [[AnnIndex]] writes them as parquet tables and serves
-    * [[annPqQueryFrom]] from the prebuilt read — both paths run the
-    * identical query algebra, so results are bit-for-bit equal. */
-  private[operators] final case class PqArtifacts(
-      cw: DataFrame, codes: DataFrame, ncode: DataFrame)
-
-  private[operators] def pqArtifacts(spark: SparkSession, dir: String,
-                                     codewords: Int = PqCodewords): PqArtifacts = {
-    val sv = subVectors(quantized(spark, dir))
-    val cw = pqCodebooks(spark, dir, codewords = codewords)
-    // codes is consumed by the norm aggregate AND the ADC scan; the
-    // recompute is deliberate in the in-query path — persisting it was
-    // measured SLOWER at bench scale (the materialization job
-    // outweighs the cheap assign); the build-once path (AnnIndex)
-    // materializes it as the parquet sidecar instead
-    val codes = pqAssign(sv, cw).select(col("vec_id"), col("m"), col("cid"))
-    val ncode = codes.join(broadcast(cw), Seq("m", "cid"))
-      .groupBy("vec_id").agg(sum(col("cn")).as("nc"))
-    PqArtifacts(cw, codes, ncode)
-  }
-
-  /** The query-side half of #139: per-query LUT against the (possibly
-    * prebuilt) codebooks, ADC scan over the codes sidecar, exact
-    * rerank of the shortlist against the corpus vectors. */
-  private[operators] def annPqQueryFrom(spark: SparkSession, dir: String,
-                                        a: PqArtifacts,
-                                        rerank: Int = PqRerank): DataFrame = {
-    val v = quantized(spark, dir)
-    val cw = a.cw
-    val codes = a.codes
-    // r22: the ADC scan is a per-vector compiled fold over broadcast
-    // LUTs. The vector's M codes collect to ONE array row (a single
-    // slim exchange); each query's M·K sub-dot table and the
-    // codeword-norm table ride one broadcast row each; adot and the
-    // reconstructed norm come out of in-row folds (PqAdcL /
-    // PqCodesNormL — long sums in subspace order, the exact algebra
-    // of the joins they replace). The former spelling fanned every
-    // code row out queries-wide through an (m, cid) join, re-gathered
-    // the M·Q·N rows across a (query, vector) aggregate exchange, and
-    // paid a THIRD corpus-scale pass + join for the ncode aggregate —
-    // the a.ncode artifact stays (the prebuilt store's contract) but
-    // the scan no longer reads it; the fold recomputes the identical
-    // Σ cn from the codes.
-    val cds = codes.groupBy("vec_id")
-      .agg(expr("transform(array_sort(collect_list(struct(" +
-        "CAST(m AS BIGINT) AS m, CAST(cid AS BIGINT) AS cid))), p -> p.cid)")
-        .as("cds"))
-    val lutRow = subVectors(v.filter(col("vec_id") < NumQueries))
-      .join(broadcast(cw), "m")
-      .select(col("vec_id").as("query_id"), col("nn").as("nq"),
-        col("m"), col("cid"),
-        graft.functions.VectorFunctions.dot_l(col("sq"), col("cq")).as("pdot"))
-      .groupBy("query_id", "nq")
-      .agg(expr("array_sort(collect_list(struct(CAST(m AS BIGINT) AS m, " +
-        "CAST(cid AS BIGINT) AS cid, pdot)))").as("pda"))
-      .agg(collect_list(struct(col("query_id"), col("nq"), col("pda")))
-        .as("luts"))
-    val cnRow = cw.agg(expr("array_sort(collect_list(struct(" +
-      "CAST(m AS BIGINT) AS m, CAST(cid AS BIGINT) AS cid, cn)))").as("cna"))
-    val adc = cds.crossJoin(broadcast(lutRow)).crossJoin(broadcast(cnRow))
-      .select(col("vec_id"),
-        graft.functions.VectorFunctions
-          .pq_codes_norm_l(col("cds"), col("cna")).as("nc"),
-        explode(graft.functions.VectorFunctions
-          .pq_adc_l(col("cds"), col("luts"))).as("s"))
-      .filter(col("vec_id") =!= col("s.query_id"))
-      .select(col("s.query_id").as("query_id"), col("vec_id"),
-        col("s.adot").as("adot"), col("s.nq").as("nq"), col("nc"))
-      .withColumn("acos",
-        col("adot").cast("double") /
-          sqrt(col("nq").cast("double") * col("nc").cast("double")))
-    val wa = Window.partitionBy("query_id")
-      .orderBy(col("acos").desc, col("vec_id"))
-    val shortlist = adc.withColumn("arank", row_number().over(wa))
-      .filter(col("arank") <= rerank)
-      .select(col("query_id"), col("vec_id").as("cand_id"))
-    val qvec = v.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"),
-        col("nn").as("nq"))
-    val candq = shortlist.join(broadcast(qvec), "query_id")
-    rankTopK(v.join(broadcast(candq), col("vec_id") === col("cand_id"))
-      .select(col("query_id"), col("vec_id"),
-        graft.functions.VectorFunctions.dot_l(col("q"), col("qq")).as("dot"),
-        col("nq"), col("nn").as("nc")))
-  }
+  /** The fixed one-row coarse quantizer that turns IVF-PQ into plain
+    * PQ: list 0, an all-zero centroid, norm 0. */
+  private[operators] def oneList(spark: SparkSession): DataFrame =
+    spark.range(1).select(lit(0L).as("cid"),
+      array_repeat(lit(0L), PqSub * PqSubDim).as("cq"), lit(0L).as("cn"))
 
   val annPqSql: String = {
     val D = PqSubDim
@@ -1127,77 +1058,69 @@ object Similarity {
 
   /** ADC scoring against a residual-encoded corpus, exact in integer
     * parts: dot(q, x̂) = dot(q, c_cid) + Σ_m LUT[m, code_m] where the
-    * LUT holds dot(q_sub, residual-codeword); ‖x̂‖² is precomputed at
-    * ENCODE time as cn(cid) + 2·Σ_m cross(cid, m, code) + Σ_m
-    * cn_code(m, code) — cross is the (cid, m, code) dot table between
-    * coarse-centroid slices and residual codewords, O(K·M·Kc) rows,
-    * broadcast. Every term is an exact integer in both engines; the
-    * only FP is the final cosine division (IEEE, bit-identical).
+    * LUT holds dot(q_sub, residual-codeword); ‖x̂‖² = cn(cid) +
+    * 2·Σ_m cross(cid, m, code) + Σ_m cn_code(m, code) — cross is the
+    * (cid, m, code) dot table between coarse-centroid slices and
+    * residual codewords, O(K·M·Kc) rows, broadcast. Every term is an
+    * exact integer in both engines; the only FP is the final cosine
+    * division (IEEE, bit-identical).
     *
     * Scale shape: coarse centroids, residual codebooks, the cross
     * table and each query's LUT are all O(model)-sized broadcasts.
-    * The corpus-side frames are the M slim code rows per vector and
-    * the 1-row-per-vector (cid, nc_hat) sidecar — the ADC scan joins
-    * codes to probed lists on cid (only probed lists' rows survive)
-    * and never touches the vector column; the exact rerank joins the
-    * ≤ queries·PqRerank shortlist back broadcast-only. Same tail
-    * idiom as #139: both ranks ride row_number ≤ k under the
-    * TopKRewrite bounded-heap plan. */
+    * The corpus-side frame is one (m, code) array row per vector —
+    * the ADC scan keeps only probed lists' rows and never touches the
+    * vector column; the exact rerank ([[rerankTopK]]) joins the
+    * ≤ queries·PqRerank shortlist back broadcast-only. */
   def annIvfPq(spark: SparkSession, dir: String,
                nProbe: Int = NProbe,
                rerank: Int = PqRerank,
                codewords: Int = PqCodewords): DataFrame = {
-    val a = ivfPqArtifacts(spark, dir, codewords)
-    annIvfPqQueryFrom(spark, dir, a, nProbe, rerank)
+    val v = quantized(spark, dir)
+    annIvfPqQueryFrom(spark, dir,
+      ivfPqArtifactsFrom(v, kmeansCentroidsFrom(v), codewords), nProbe, rerank)
   }
 
   /** The IVF-PQ index's build-side artifacts (everything FAISS's
-    * write_index serializes for an IVFPQ index): trained coarse
-    * centroids, residual codebooks, the per-vector residual codes,
-    * and the (vec_id, cid, nc_hat) sidecar that carries both the
+    * write_index serializes for an IVFPQ index): coarse centroids,
+    * residual codebooks, the per-vector residual codes, and the
+    * (vec_id, cid, nc_hat) sidecar that carries both the
     * inverted-list assignment and the encode-time reconstructed norm.
-    * [[annIvfPq]] derives them in-query; [[AnnIndex]] persists them
-    * and serves [[annIvfPqQueryFrom]] from the prebuilt read. */
+    * [[annIvfPq]] and [[annPq]] derive them in-query; [[AnnIndex]]
+    * persists them and serves [[annIvfPqQueryFrom]] from the prebuilt
+    * read. */
   private[operators] final case class IvfPqArtifacts(
       cents: DataFrame, cw: DataFrame, codes: DataFrame, nhat: DataFrame)
 
-  private[operators] def ivfPqArtifacts(spark: SparkSession, dir: String,
-                                        codewords: Int = PqCodewords)
-      : IvfPqArtifacts =
-    ivfPqArtifactsFrom(quantized(spark, dir), codewords)
-
-  /** The same build over an arbitrary quantized (vec_id, q, nn) frame
-    * — lets [[AnnIndex]] build on a historical corpus snapshot (its
-    * freshness audit freezes the index at a cutoff) with identical
-    * training algebra. The k-means seed window and the PqTrainMod
-    * training subset must be inside the frame. */
-  private[operators] def ivfPqArtifactsFrom(v: DataFrame,
+  /** The build over a quantized (vec_id, q, nn) frame and a coarse
+    * quantizer `cents` (cid, cq, cn) — k-means centroids for IVF-PQ,
+    * [[oneList]] for PQ. Taking the frame lets [[AnnIndex]] build on a
+    * historical corpus snapshot (its freshness audit freezes the
+    * index at a cutoff) with identical training algebra. The seed
+    * windows and the PqTrainMod training subset must be inside the
+    * frame. */
+  private[operators] def ivfPqArtifactsFrom(v: DataFrame, cents: DataFrame,
                                             codewords: Int = PqCodewords)
       : IvfPqArtifacts = {
-    val cents = kmeansCentroidsFrom(v)
-    // assigned/rsv stay LAZY deliberately (re-measured r21): pinning
-    // them removed the repeated assign→residual→explode recompute but
-    // cost two sequential checkpoint jobs, and the in-query build
-    // measured ~20% SLOWER under a controlled A/B — the same result
-    // the r12 codes-persist experiment recorded. The build-once path
-    // (AnnIndex) materializes these as parquet artifacts instead.
+    // assigned stays LAZY deliberately (re-measured r21): pinning it
+    // and the residual frame removed the repeated assign→residual→
+    // explode recompute but cost two sequential checkpoint jobs, and
+    // the in-query build measured ~20% SLOWER under a controlled A/B —
+    // the same result the r12 codes-persist experiment recorded. The
+    // build-once path (AnnIndex) materializes the artifacts instead.
     val assigned = assignTo(v, cents) // (vec_id, cid, q, nn)
-    val rsv = residualSubVectors(assigned, cents)
-    val cw = pqCodebooksFrom(rsv, codewords = codewords) // residual codebooks
+    val cw = pqCodebooksFrom(residualSubVectors(assigned, cents),
+      codewords = codewords) // residual codebooks
     val (codes, nhat) = ivfPqEncode(cents, cw, assigned)
     IvfPqArtifacts(cents, cw, codes, nhat)
   }
 
   /** Residuals r = q − c_cid of an assigned frame, exploded to PQ
-    * sub-vectors — the frame residual-codebook TRAINING and vector
-    * ENCODING both read. */
-  private def residualSubVectors(assigned: DataFrame, cents: DataFrame): DataFrame = {
-    val resid = assigned.join(broadcast(cents), "cid")
-      .select(col("vec_id"), col("cid").as("list_id"),
-        expr("zip_with(q, cq, (a, b) -> a - b)").as("q"))
-      .withColumn("nn", graft.functions.VectorFunctions.norm_sq_l(col("q")))
-    subVectors(resid.select("vec_id", "q", "nn"))
-  }
+    * sub-vectors (vec_id, cid, m, sq, sn) — the frame residual-codebook
+    * TRAINING and vector ENCODING both read. */
+  private def residualSubVectors(assigned: DataFrame, cents: DataFrame): DataFrame =
+    subVectors(assigned.join(broadcast(cents), "cid")
+      .select(col("vec_id"), col("cid"),
+        expr("zip_with(q, cq, (a, b) -> a - b)").as("q")))
 
   /** ENCODE an assigned vector frame under a (possibly FROZEN) model
     * (cents, cw): the per-vector codes and the reconstructed-norm
@@ -1211,47 +1134,47 @@ object Similarity {
       : (DataFrame, DataFrame) = {
     // codes carry their inverted-list id: (vec_id, cid, m, code) IS
     // the persisted layout (partitioned by cid, a probe reads only
-    // its lists' directories). r22: the list id rides the residual
-    // explode itself — the residual join already sees cid, so the
-    // codes come out keyed without the former corpus-scale
-    // codes ⋈ vecList re-join (one exchange pair fewer per encode).
-    val residK = assigned.join(broadcast(cents), "cid")
-      .select(col("vec_id"), col("cid"),
-        expr("zip_with(q, cq, (a, b) -> a - b)").as("q"))
-      .withColumn("nn", graft.functions.VectorFunctions.norm_sq_l(col("q")))
-    val rsvK = residK
-      .select(col("vec_id"), col("cid"), col("nn"),
-        explode(expr(s"transform(sequence(0, ${PqSub - 1}), m -> " +
-          s"named_struct('m', m, 'sq', slice(q, m * $PqSubDim + 1, $PqSubDim)))"))
-          .as("s"))
-      .select(col("vec_id"), col("cid"),
-        col("s.m").as("m"), col("s.sq").as("sq"))
-      .withColumn("sn", graft.functions.VectorFunctions.norm_sq_l(col("sq")))
-    val caByM = cw.groupBy("m")
-      .agg(collect_list(struct(col("cid"), col("cq"), col("cn"))).as("ca"))
-    val codes = rsvK.join(broadcast(caByM), "m")
-      .select(col("vec_id"), col("cid"), col("m"),
-        graft.functions.VectorFunctions
-          .nearest_cid_l(col("sq"), col("sn"), col("ca")).as("code"))
-      .filter(col("code").isNotNull)
+    // its lists' directories)
+    val codes = pqAssign(residualSubVectors(assigned, cents), cw)
+      .select(col("vec_id"), col("cid"), col("m"), col("code"))
     // reconstructed-norm sidecar: one integer per vector, encode-time
-    val cross = cents.crossJoin(broadcast(cw.select(col("m"),
+    val nhat = withNcHat(codeLists(codes), cents, cw)
+      .select(col("vec_id"), col("cid"), col("nc_hat"))
+    (codes, nhat)
+  }
+
+  /** One row per (vector, list) holding its (m, code) structs — the
+    * input of both kernels ([[graft.functions.VectorFunctions.ivfPqAdc]],
+    * [[graft.functions.VectorFunctions.ivfPqNcHat]]), which look each
+    * code up by its own m. */
+  private def codeLists(codes: DataFrame): DataFrame =
+    codes.groupBy(col("vec_id"), col("cid").cast("long").as("cid"))
+      .agg(collect_list(struct(col("m").cast("long").as("m"),
+        col("code").cast("long").as("code"))).as("cds"))
+
+  /** Adds ‖x̂‖² (`nc_hat`) to a [[codeLists]] frame by the in-row norm
+    * kernel over two broadcast rows: the (cid, m, code, xdot, ccn)
+    * cross table — xdot = dot(c_cid[m], codeword), ccn = ‖codeword‖²,
+    * O(K·M·Kc) entries — and the (cid, cn) centroid norms. */
+  private def withNcHat(cds: DataFrame, cents: DataFrame,
+                        cw: DataFrame): DataFrame = {
+    val crxRow = cents.crossJoin(broadcast(cw.select(col("m"),
         col("cid").as("code"), col("cq").as("ccq"), col("cn").as("ccn"))))
       .select(col("cid"), col("m"), col("code"),
         graft.functions.VectorFunctions.dot_l(
           expr(s"slice(cq, m * $PqSubDim + 1, $PqSubDim)"), col("ccq"))
           .as("xdot"),
         col("ccn"))
-    val nhat = codes
-      .join(broadcast(cross), Seq("cid", "m", "code"))
-      .groupBy("vec_id", "cid")
-      .agg((sum(col("xdot")) * 2 + sum(col("ccn"))).as("rpart"))
-      .join(broadcast(cents.select(col("cid"), col("cn"))), "cid")
-      // x̂ is an exact integer vector, so ‖x̂‖² ≥ 0; the max(·,1) only
-      // guards the cosine division against a (degenerate) zero vector
-      .select(col("vec_id"), col("cid"),
-        greatest(col("cn") + col("rpart"), lit(1L)).as("nc_hat"))
-    (codes, nhat)
+      .agg(expr("array_sort(collect_list(struct(CAST(cid AS BIGINT) AS cid, " +
+        "CAST(m AS BIGINT) AS m, CAST(code AS BIGINT) AS code, xdot, ccn)))")
+        .as("crx"))
+    val cenRow = cents.agg(expr(
+      "array_sort(collect_list(struct(CAST(cid AS BIGINT) AS cid, cn)))")
+      .as("cen"))
+    cds.crossJoin(broadcast(crxRow)).crossJoin(broadcast(cenRow))
+      .withColumn("nc_hat", graft.functions.VectorFunctions
+        .ivf_pq_nc_hat_l(col("cds"), col("cid"), col("crx"), col("cen")))
+      .drop("crx", "cen")
   }
 
   /** Encode arbitrary quantized vectors under a frozen model — the
@@ -1266,8 +1189,8 @@ object Similarity {
     * (vec_id, q, nn): each query's nProbe nearest lists with the
     * query-centroid dot carried along. Model-sized output
     * (≤ queries·nProbe rows) — collectable for static list pruning. */
-  private[graft] def ivfProbes(queries: DataFrame, cents: DataFrame,
-                               nProbe: Int = NProbe): DataFrame = {
+  private[operators] def ivfProbes(queries: DataFrame, cents: DataFrame,
+                                   nProbe: Int = NProbe): DataFrame = {
     val wProbe = Window.partitionBy("vec_id").orderBy(col("d2"), col("cid"))
     queries
       .crossJoin(broadcast(cents))
@@ -1280,10 +1203,10 @@ object Similarity {
         col("cid"), col("qcdot"))
   }
 
-  /** The query-side half of #161: probe the nProbe nearest lists,
-    * LUT + ADC over only the probed lists' codes, exact rerank. The
-    * list assignment and reconstructed norms both come from the
-    * artifact sidecar — the query never touches the build chain. */
+  /** The query-side half of #161 (and of #139, its one-list case):
+    * probe the nProbe nearest lists, LUT + ADC over only the probed
+    * lists' codes, exact rerank. The list assignment comes from the
+    * artifacts — the query never touches the build chain. */
   private[graft] def annIvfPqQueryFrom(spark: SparkSession, dir: String,
                                            a: IvfPqArtifacts,
                                            nProbe: Int = NProbe,
@@ -1295,9 +1218,9 @@ object Similarity {
   /** Top-k for an ARBITRARY query frame (vec_id, q, nn) against the
     * (possibly prebuilt) index — the SERVING seam:
     * [[graft.streaming.AnnStream]] scores each micro-batch of
-    * arriving query vectors through it, and the batch #161/#168 paths
-    * are the corpus-member special case. A query sharing an id with a
-    * corpus vector is excluded from its own neighbor list (the
+    * arriving query vectors through it, and the batch #139/#161/#168
+    * paths are the corpus-member special case. A query sharing an id
+    * with a corpus vector is excluded from its own neighbor list (the
     * classic self-match rule); disjoint-id queries — the serving
     * case — match against the whole corpus. */
   private[graft] def annIvfPqTopKFor(spark: SparkSession, dir: String,
@@ -1305,34 +1228,20 @@ object Similarity {
                                      a: IvfPqArtifacts,
                                      nProbe: Int = NProbe,
                                      rerank: Int = PqRerank): DataFrame = {
-    val v = quantized(spark, dir)
-    val cents = a.cents
-    val cw = a.cw
-    val codes = a.codes
-    // query side: NProbe nearest lists, with dot(q, c) computed in the
-    // same centroid pass. r22: the probe filter, the ADC sum and the
-    // reconstructed norm all run as per-vector compiled folds over
-    // broadcast tables (the annPqQueryFrom shape, probe-filtered): the
-    // vector's M codes collect to one array row keyed by its list —
-    // a single slim exchange — and a query emits a score row iff its
+    // r22: the probe filter, the ADC sum and the reconstructed norm all
+    // run as per-vector compiled folds over broadcast tables: the
+    // vector's M codes collect to one array row keyed by its list — a
+    // single slim exchange — and a query emits a score row iff its
     // probe set contains that list (the inner probe-join semantics).
-    // The former spelling fanned probed code rows out per probing
-    // query, re-gathered them across a (query, vector) aggregate
-    // exchange, and paid the nhat artifact's whole encode chain plus a
-    // corpus-scale join for norms the fold recomputes in-row from the
-    // same broadcast cross table (the a.nhat artifact stays — the
-    // prebuilt store's contract — but the scan no longer reads it).
-    val probes = ivfProbes(queries, cents, nProbe)
-    val cdsK = codes.groupBy(col("vec_id"), col("cid").cast("long").as("cid"))
-      .agg(expr("transform(array_sort(collect_list(struct(" +
-        "CAST(m AS BIGINT) AS m, CAST(code AS BIGINT) AS code))), p -> p.code)")
-        .as("cds"))
-    val lutsRow = probes
+    // The norm is recomputed in-row by the kernel the encode uses, so
+    // the scan never reads the nhat artifact (it stays the prebuilt
+    // store's contract).
+    val lutsRow = ivfProbes(queries, a.cents, nProbe)
       .groupBy("query_id", "nq")
       .agg(expr("array_sort(collect_list(struct(CAST(cid AS BIGINT) AS cid, " +
         "qcdot)))").as("prb"))
       .join(subVectors(queries)
-        .join(broadcast(cw), "m")
+        .join(broadcast(a.cw), "m")
         .select(col("vec_id").as("query_id"), col("m"),
           col("cid").as("code"),
           graft.functions.VectorFunctions.dot_l(col("sq"), col("cq")).as("pdot"))
@@ -1341,46 +1250,15 @@ object Similarity {
           "CAST(code AS BIGINT) AS code, pdot)))").as("pda")), "query_id")
       .agg(collect_list(struct(col("query_id"), col("nq"), col("prb"),
         col("pda"))).as("luts"))
-    val crxRow = cents.crossJoin(broadcast(cw.select(col("m"),
-        col("cid").as("code"), col("cq").as("ccq"), col("cn").as("ccn"))))
-      .select(col("cid"), col("m"), col("code"),
-        graft.functions.VectorFunctions.dot_l(
-          expr(s"slice(cq, m * $PqSubDim + 1, $PqSubDim)"), col("ccq"))
-          .as("xdot"),
-        col("ccn"))
-      .agg(expr("array_sort(collect_list(struct(CAST(cid AS BIGINT) AS cid, " +
-        "CAST(m AS BIGINT) AS m, CAST(code AS BIGINT) AS code, xdot, ccn)))")
-        .as("crx"))
-    val cenRow = cents.agg(expr(
-      "array_sort(collect_list(struct(CAST(cid AS BIGINT) AS cid, cn)))")
-      .as("cen"))
-    val adc = cdsK.crossJoin(broadcast(lutsRow))
-      .crossJoin(broadcast(crxRow)).crossJoin(broadcast(cenRow))
-      .select(col("vec_id"),
-        graft.functions.VectorFunctions
-          .ivf_pq_nc_hat_l(col("cds"), col("cid"), col("crx"), col("cen"))
-          .as("nc_hat"),
+    val adc = withNcHat(codeLists(a.codes), a.cents, a.cw)
+      .crossJoin(broadcast(lutsRow))
+      .select(col("vec_id"), col("nc_hat"),
         explode(graft.functions.VectorFunctions
           .ivf_pq_adc_l(col("cds"), col("cid"), col("luts"))).as("s"))
       .filter(col("vec_id") =!= col("s.query_id"))
       .select(col("s.query_id").as("query_id"), col("vec_id"),
-        col("s.adot").as("adot"), col("s.nq").as("nq"), col("nc_hat"))
-      .withColumn("acos",
-        col("adot").cast("double") /
-          sqrt(col("nq").cast("double") * col("nc_hat").cast("double")))
-    val wa = Window.partitionBy("query_id")
-      .orderBy(col("acos").desc, col("vec_id"))
-    val shortlist = adc.withColumn("arank", row_number().over(wa))
-      .filter(col("arank") <= rerank)
-      .select(col("query_id"), col("vec_id").as("cand_id"))
-    val qvec = queries
-      .select(col("vec_id").as("query_id"), col("q").as("qq"),
-        col("nn").as("nq"))
-    val candq = shortlist.join(broadcast(qvec), "query_id")
-    rankTopK(v.join(broadcast(candq), col("vec_id") === col("cand_id"))
-      .select(col("query_id"), col("vec_id"),
-        graft.functions.VectorFunctions.dot_l(col("q"), col("qq")).as("dot"),
-        col("nq"), col("nn").as("nc")))
+        col("s.adot").as("adot"), col("s.nq").as("nq"), col("nc_hat").as("nc"))
+    rerankTopK(adc, rerank, quantized(spark, dir), queries)
   }
 
   val annIvfPqSql: String = annIvfPqSqlTrainedOn("TRUE")

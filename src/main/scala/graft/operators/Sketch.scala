@@ -204,21 +204,16 @@ object Sketch {
 
   def sketchHll(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // pinned (r21): the register file is sources × m rows — pinning it
-    // lets the source grid derive from the SKETCH (every source has at
-    // least one register row: the un-filtered token explode emits a
-    // token per document, empty texts included — and the coalesce
-    // makes that hold for NULL text too, r22/ADVICE r21: split of a
-    // null array explodes to nothing, which would silently drop an
-    // all-null source from the grid) instead of a second corpus scan,
-    // and the grid join reads the same blocks
-    val regs = graft.Checkpoints.pin(hllRegistersOf(
-      Tables.load(spark, dir, "documents")
-        .select(col("source"),
-          explode(split(normText(coalesce(col("text"), lit(""))), " "))
-            .as("tok")),
-      "source"))
-    val grid = regs.select("source").distinct()
+    val docs = Tables.load(spark, dir, "documents")
+    // NULL text contributes no token (split of NULL explodes to
+    // nothing, as the oracle's unnest does), so the source grid comes
+    // from the documents, not the sketch: a source whose texts are all
+    // NULL keeps its m register rows at r = 0
+    val regs = hllRegistersOf(
+      docs.select(col("source"),
+        explode(split(normText(col("text")), " ")).as("tok")),
+      "source")
+    val grid = docs.select("source").distinct()
       .crossJoin(broadcast(
         spark.range(HllRegisters).select(col("id").as("j"))))
     val win = Window.partitionBy("source")

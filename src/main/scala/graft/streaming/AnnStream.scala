@@ -43,14 +43,10 @@ object AnnStream {
     val qs = batch
       .select(col("vec_id"), expr(graft.Constants.QuantizeExprSql).as("q"))
       .withColumn("nn", graft.functions.VectorFunctions.norm_sq_l(col("q")))
-    val a = AnnIndex.readIvfPq(spark, indexDir)
     // static per-batch list pruning: probed cids are model-sized and
     // known before the codes scan (the #168 move, per micro-batch)
-    val probed = Similarity.ivfProbes(qs, a.cents, nProbe)
-      .select("cid").distinct().collect().map(_.getLong(0)).sorted
-    val pruned = a.copy(
-      codes = a.codes.filter(col("cid").isin(probed: _*)),
-      nhat = a.nhat.filter(col("cid").isin(probed: _*)))
+    val pruned = AnnIndex.prunedToProbes(qs,
+      AnnIndex.readIvfPq(spark, indexDir), nProbe)
     Similarity.annIvfPqTopKFor(spark, dir, qs, pruned, nProbe)
   }
 

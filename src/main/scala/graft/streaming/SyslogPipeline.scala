@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.Constants
-import graft.functions.BinaryFunctions._
 import graft.functions.SyslogFunctions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -25,10 +24,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *                      2-minute watermark (late messages join their
   *                      window until the watermark passes; the relay's
   *                      timer flush becomes watermark-driven emission)
-  *  - gzip spool      → `foreachBatch`: group the micro-batch by
-  *                      (source, dest), build the CloudWatch record
-  *                      JSON, gzip it with the level-9 expression, and
-  *                      append to the spool table
+  *  - gzip spool      → the `graft-spool` streaming sink
+  *                      ([[spoolDirQuery]]): per (source, dest), build
+  *                      the CloudWatch record JSON, gzip it at level 9
+  *                      and publish one spool file per record
   *
   * Scale: stateless map for parse; the only stateful operator is the
   * windowed aggregation, keyed (window, hostname) — state size is
@@ -140,47 +139,16 @@ object SyslogPipeline {
         col("window.start").cast("long").as("window_start_s"),
         col("hostname"), col("n_messages"), col("n_bytes"))
 
-  /** Spool sink: per micro-batch, (hostname)-grouped gzip record rows
-    * appended as parquet (binary `record_gz` column = the spool file
-    * body the reference writes at sink.py:211-217). Record shape
-    * (logGroup prefix/class/port) comes from [[graft.RelayConfig]]. */
-  def spoolQuery(parsed: DataFrame, spoolDir: String,
-                 checkpointDir: String,
-                 config: graft.RelayConfig = graft.RelayConfig(),
-                 port: Int = 6514): StreamingQuery =
-    parsed.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val records = batch
-          .groupBy("hostname")
-          .agg(
-            to_json(struct(
-              lit("000000000000").as("owner"),
-              lit(config.logGroup(port)).as("logGroup"),
-              col("hostname").as("logStream"),
-              array(lit(config.logGroup(port))).as("subscriptionFilters"),
-              lit("DATA_MESSAGE").as("messageType"),
-              array_sort(collect_list(struct(
-                col("ts_ms").as("timestamp"), col("message")))).as("logEvents")))
-              .as("record_json"))
-          .select(
-            col("hostname"),
-            lit(batchId).as("batch_id"),
-            gzip_compress(col("record_json").cast("binary")).as("record_gz"))
-        records.write.mode("append").parquet(spoolDir)
-        ()
-      }
-      .start()
-
-  /** Spool DIRECTORY sink: the same parsed stream written as REAL
-    * spool files through the `graft-spool` streaming sink — one gzip
-    * CloudWatch record per file, flushed per (log_group, log_stream)
-    * whenever the accumulated JSON would breach the record cap
-    * (sink.py:167-186). Unlike [[spoolQuery]]'s parquet spool TABLE,
-    * this directory is the reference's own on-disk format: readable
-    * back with `spark.read.format("graft-spool")`, tail-able with
-    * `readStream`, closing the relay → spool → drain loop end to end.
+  /** Spool sink: the parsed stream written as REAL spool files
+    * through the `graft-spool` streaming sink — one gzip CloudWatch
+    * record per file (the spool file body the reference writes at
+    * sink.py:211-217), flushed per (log_group, log_stream) whenever
+    * the accumulated JSON would breach the record cap
+    * (sink.py:167-186). Record shape (logGroup prefix/class/port)
+    * comes from [[graft.RelayConfig]]. The directory is the
+    * reference's own on-disk format: readable back with
+    * `spark.read.format("graft-spool")`, tail-able with `readStream`,
+    * closing the relay → spool → drain loop end to end.
     * Record ids are deterministic (md5 of message ⊕ timestamp,
     * left-padded to the reference's 56 digits) — the documented
     * divergence from the reference's random ids. */

@@ -456,6 +456,32 @@ class SequenceNgramsSketchSpec extends SparkSpec {
     }
   }
 
+  test("sketch_hll: NULL text adds no token; an all-NULL source keeps an empty grid") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_hll_null").toString
+    Seq[(Long, String, String)](
+      (1L, "allnull", null), (2L, "allnull", null),
+      (3L, "mixed", "alpha beta gamma"), (4L, "mixed", null),
+      (5L, "mixed", "beta delta"),
+      (6L, "clean", "alpha beta gamma"), (7L, "clean", "beta delta"))
+      .toDF("doc_id", "source", "text")
+      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+    val bySource = Sketch.sketchHll(spark, dir).collect()
+      .groupBy(_.getString(0)).map { case (src, rows) =>
+        src -> rows.map(r => (r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getDouble(4))).sortBy(_._1).toSeq }
+    assert(bySource.keySet === Set("allnull", "mixed", "clean"))
+    // the all-NULL source keeps its full register grid, every register
+    // empty (the oracle's grid comes from the documents' sources)
+    val allNull = bySource("allnull")
+    assert(allNull.map(_._1) === (0L until Sketch.HllRegisters).toSeq)
+    assert(allNull.forall(_._2 == 0L), allNull.filter(_._2 != 0L))
+    assert(allNull.head._3 === Sketch.HllRegisters.toLong)
+    // NULL rows contribute nothing: the mixed source's sketch equals
+    // the sketch of its non-NULL texts alone (no phantom '' token)
+    assert(bySource("mixed") === bySource("clean"))
+  }
+
   test("sketch_gap_quantiles: within bucket error of exact quantiles, bounded state") {
     val gapsByType = rawEvents
       .groupBy(e => (e._2, e._3))

@@ -235,7 +235,7 @@ class SimilarityTextSpec extends SparkSpec {
       .filter(col("cid").isNotNull).count() === 0L)
   }
 
-  test("pqAdc/pqCodesNorm folds equal the join+aggregate ADC spelling") {
+  test("one-list IVF-PQ ADC/norm kernels equal the join+aggregate ADC spelling") {
     import spark.implicits._
     val rnd = new scala.util.Random(11)
     val M = 3; val K = 5
@@ -245,8 +245,12 @@ class SimilarityTextSpec extends SparkSpec {
                    if !(m == 2 && c == 4))
       yield (m.toLong, c.toLong, rnd.nextInt(100).toLong))
       .toDF("m", "cid", "cn")
-    val codes = (for (v <- 0L until 20L; m <- 0 until M)
-      yield (v, m.toLong, rnd.nextInt(K).toLong)).toDF("vec_id", "m", "cid")
+    // vector 20 has no code for subspace 1: the kernels look codes up
+    // by their stored m, so only that term drops (a positional fold
+    // would read its m=2 code as m=1)
+    val codes = ((for (v <- 0L until 20L; m <- 0 until M)
+      yield (v, m.toLong, rnd.nextInt(K).toLong)) ++
+      Seq((20L, 0L, 3L), (20L, 2L, 1L))).toDF("vec_id", "m", "cid")
     val lut = (for (q <- 0L until 4L; m <- 0 until M; c <- 0 until K
                     if !(m == 2 && c == 4))
       yield (q, 1000L + q, m.toLong, c.toLong, (rnd.nextInt(200) - 100).toLong))
@@ -259,27 +263,38 @@ class SimilarityTextSpec extends SparkSpec {
     val wantNc = codes.join(cw, Seq("m", "cid"))
       .groupBy("vec_id").agg(sum("cn").as("nc")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // the folds
+    // the kernels in the one-list case: every vector in list 0, whose
+    // zero centroid gives qcdot = 0, xdot = 0 and cn = 0
     val cds = codes.groupBy("vec_id")
-      .agg(expr("transform(array_sort(collect_list(struct(m, cid))), p -> p.cid)").as("cds"))
+      .agg(expr("collect_list(struct(m, cid AS code))").as("cds"))
     val lutRow = lut.groupBy("query_id", "nq")
-      .agg(expr("array_sort(collect_list(struct(m, cid, pdot)))").as("pda"))
-      .agg(collect_list(struct(col("query_id"), col("nq"), col("pda"))).as("luts"))
-    val cnRow = cw.agg(expr("array_sort(collect_list(struct(m, cid, cn)))").as("cna"))
-    val got = cds.crossJoin(broadcast(lutRow)).crossJoin(broadcast(cnRow))
+      .agg(expr("array_sort(collect_list(struct(m, cid AS code, pdot)))").as("pda"))
+      .withColumn("prb", expr("array(struct(0L AS cid, 0L AS qcdot))"))
+      .agg(collect_list(struct(col("query_id"), col("nq"), col("prb"),
+        col("pda"))).as("luts"))
+    val crxRow = cw.agg(expr("array_sort(collect_list(struct(0L AS cid, m, " +
+      "cid AS code, 0L AS xdot, cn AS ccn)))").as("crx"))
+    val cenRow = Seq(1).toDF("x")
+      .select(expr("array(struct(0L AS cid, 0L AS cn))").as("cen"))
+    val got = cds.crossJoin(broadcast(lutRow)).crossJoin(broadcast(crxRow))
+      .crossJoin(broadcast(cenRow))
       .select(col("vec_id"),
-        functions.VectorFunctions.pq_codes_norm_l(col("cds"), col("cna")).as("nc"),
-        explode(functions.VectorFunctions.pq_adc_l(col("cds"), col("luts"))).as("s"))
+        functions.VectorFunctions.ivf_pq_nc_hat_l(col("cds"), lit(0L),
+          col("crx"), col("cen")).as("nc"),
+        explode(functions.VectorFunctions.ivf_pq_adc_l(col("cds"), lit(0L),
+          col("luts"))).as("s"))
       .select(col("vec_id"), col("nc"), col("s.query_id"), col("s.nq"), col("s.adot"))
       .collect()
-    assert(got.length === 20 * 4)
+    assert(got.length === 21 * 4)
+    assert(got.exists(_.getLong(0) == 20L))
     got.foreach { r =>
       val (v, nc, q, nq, adot) =
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
       assert(nq === 1000L + q)
       // join-spelling reference, absent pairs contributing 0
       assert(adot === wantAdc.getOrElse((q, v), 0L), s"adot q=$q v=$v")
-      assert(nc === wantNc.getOrElse(v, 0L), s"nc v=$v")
+      // the norm kernel clamps ‖x̂‖² at 1 (the cosine-division guard)
+      assert(nc === math.max(wantNc.getOrElse(v, 0L), 1L), s"nc v=$v")
     }
   }
 }

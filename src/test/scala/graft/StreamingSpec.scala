@@ -12,6 +12,18 @@ class StreamingSpec extends SparkSpec {
   private def writeLines(dir: java.nio.file.Path, name: String, lines: Seq[String]): Unit =
     Files.write(dir.resolve(name), lines.mkString("\n").getBytes("UTF-8"))
 
+  /** The bytes of every published `.gz` spool file, in name order. */
+  private def spoolFiles(dir: java.nio.file.Path): Seq[Array[Byte]] =
+    dir.toFile.listFiles().filter(_.getName.endsWith(".gz"))
+      .sortBy(_.getName).map(f => Files.readAllBytes(f.toPath)).toSeq
+
+  private def gunzip(gz: Array[Byte]): String =
+    new String(new java.util.zip.GZIPInputStream(
+      new java.io.ByteArrayInputStream(gz)).readAllBytes(), "UTF-8")
+
+  private def spoolTable(dir: java.nio.file.Path) =
+    spark.read.format("graft-spool").load(dir.toString)
+
   test("file stream -> parse -> watermark window -> memory sink") {
     val in = Files.createTempDirectory("graft_stream_in")
     writeLines(in, "conn1.log", Seq(
@@ -38,19 +50,24 @@ class StreamingSpec extends SparkSpec {
     writeLines(in, "conn1.log", Seq(
       "<165>1 2024-01-05T10:00:10Z web01 app one",
       "<165>1 2024-01-05T10:00:20Z web01 app two"))
-    val q = SyslogPipeline.spoolQuery(
+    val q = SyslogPipeline.spoolDirQuery(
       SyslogPipeline.parsedStream(spark, in.toString),
       spool.toString, ckpt.toString)
     q.awaitTermination(60000)
-    val recs = spark.read.parquet(spool.toString)
-    assert(recs.count() === 1)
-    val gz = recs.select("record_gz").collect().head.getAs[Array[Byte]](0)
+    val files = spoolFiles(spool)
+    assert(files.length === 1)
+    val gz = files.head
     assert(gz(0) == 0x1f.toByte && gz(1) == 0x8b.toByte)
-    val json = new String(new java.util.zip.GZIPInputStream(
-      new java.io.ByteArrayInputStream(gz)).readAllBytes(), "UTF-8")
+    val json = gunzip(gz)
     assert(json.contains("\"logStream\":\"web01\""))
     assert(json.contains("app one") && json.contains("app two"))
     assert(json.contains("\"messageType\":\"DATA_MESSAGE\""))
+    // the same record read back as events through the spool source
+    val back = spoolTable(spool)
+    assert(back.count() === 2)
+    assert(back.select("log_stream", "message_type").distinct().collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq ===
+      Seq(("web01", "DATA_MESSAGE")))
   }
 
   test("spool checkpoint gives exactly-once incremental processing") {
@@ -58,17 +75,17 @@ class StreamingSpec extends SparkSpec {
     val spool = Files.createTempDirectory("graft_ckpt_out")
     val ckpt = Files.createTempDirectory("graft_ckpt_ck")
     writeLines(in, "c1.log", Seq("<165>1 2024-01-05T10:00:10Z web01 app one"))
-    val q1 = SyslogPipeline.spoolQuery(
+    val q1 = SyslogPipeline.spoolDirQuery(
       SyslogPipeline.parsedStream(spark, in.toString), spool.toString, ckpt.toString)
     q1.awaitTermination(60000)
     // second run with the same checkpoint only sees the NEW file
     writeLines(in, "c2.log", Seq("<165>1 2024-01-05T10:00:20Z web02 app two"))
-    val q2 = SyslogPipeline.spoolQuery(
+    val q2 = SyslogPipeline.spoolDirQuery(
       SyslogPipeline.parsedStream(spark, in.toString), spool.toString, ckpt.toString)
     q2.awaitTermination(60000)
-    val recs = spark.read.parquet(spool.toString)
-    assert(recs.count() === 2)
-    val hosts = recs.select("hostname").collect().map(_.getString(0)).sorted
+    assert(spoolFiles(spool).length === 2)
+    val hosts = spoolTable(spool).select("log_stream").collect()
+      .map(_.getString(0)).sorted
     assert(hosts.toSeq === Seq("web01", "web02")) // web01 NOT reprocessed
   }
 
@@ -83,16 +100,15 @@ class StreamingSpec extends SparkSpec {
     val spool = Files.createTempDirectory("graft_cfg_out")
     val ckpt = Files.createTempDirectory("graft_cfg_ck")
     writeLines(in, "c.log", Seq("<165>1 2024-01-05T10:00:10Z web01 app x"))
-    val q = SyslogPipeline.spoolQuery(
+    val q = SyslogPipeline.spoolDirQuery(
       SyslogPipeline.parsedStream(spark, in.toString),
       spool.toString, ckpt.toString,
       config = graft.RelayConfig(groupPrefix = "/prod"), port = 514)
     q.awaitTermination(60000)
-    val gz = spark.read.parquet(spool.toString)
-      .select("record_gz").collect().head.getAs[Array[Byte]](0)
-    val json = new String(new java.util.zip.GZIPInputStream(
-      new java.io.ByteArrayInputStream(gz)).readAllBytes(), "UTF-8")
+    val json = gunzip(spoolFiles(spool).head)
     assert(json.contains("\"logGroup\":\"/prod/syslog/514\""))
+    assert(spoolTable(spool).select("log_group").collect()
+      .map(_.getString(0)).toSeq === Seq("/prod/syslog/514"))
   }
 
   test("streaming dedup admits each distinct text once across batches and restarts") {
@@ -179,21 +195,22 @@ class StreamingSpec extends SparkSpec {
       """{"version":"1.1","host":"app01","short_message":"boot ok","timestamp":1704412800,"level":6}""",
       """{"version":"1.1","host":"app01","short_message":"frac ts","timestamp":1704412800.5,"level":6}""",
       "not json at all"))
-    val q = SyslogPipeline.spoolQuery(
+    val q = SyslogPipeline.spoolDirQuery(
       SyslogPipeline.parsedGelfStream(spark, in.toString),
       spool.toString, ckpt.toString,
       config = RelayConfig(gelf = true), port = 12201)
     q.awaitTermination(60000)
-    val recs = spark.read.parquet(spool.toString)
-    val gz = recs.filter(col("hostname") === "app01")
-      .select("record_gz").collect().head.getAs[Array[Byte]](0)
-    val json = new String(new java.util.zip.GZIPInputStream(
-      new java.io.ByteArrayInputStream(gz)).readAllBytes(), "UTF-8")
+    val json = spoolFiles(spool).map(gunzip)
+      .find(_.contains("\"logStream\":\"app01\"")).get
     assert(json.contains("\"logGroup\":\"/kinesyslog/gelf/12201\""))
     assert(json.contains("\"timestamp\":1704412800000") &&
       json.contains("\"timestamp\":1704412800500"))
+    val recs = spoolTable(spool)
+    assert(recs.filter(col("log_stream") === "app01")
+      .select("timestamp").collect().map(_.getLong(0)).sorted.toSeq ===
+      Seq(1704412800000L, 1704412800500L))
     // the non-JSON datagram still lands (hostname fallback + recv time)
-    assert(recs.filter(col("hostname") === "unknown").count() === 1)
+    assert(recs.filter(col("log_stream") === "unknown").count() === 1)
   }
 
   test("flatMapGroupsWithState sessionization closes sessions by gap and by watermark timeout") {
@@ -303,18 +320,19 @@ class StreamingSpec extends SparkSpec {
     feed(Seq(dgram(7, 0, 2, half1) -> 100L))
     Thread.sleep(1100) // distinct mod times => deterministic file order
     feed(Seq(dgram(7, 1, 2, half2) -> 101L))
-    val q = SyslogPipeline.spoolQuery(
+    val q = SyslogPipeline.spoolDirQuery(
       SyslogPipeline.parsedChunkedGelfStream(spark, in.toString,
         maxFilesPerTrigger = 1),
       spool.toString, ckpt.toString,
       config = RelayConfig(gelf = true), port = 12201)
     q.awaitTermination(60000)
-    val recs = spark.read.parquet(spool.toString)
-    assert(recs.filter(col("hostname") === "chunky").count() === 1)
-    val gz = recs.filter(col("hostname") === "chunky")
-      .select("record_gz").collect().head.getAs[Array[Byte]](0)
-    val json = new String(new java.util.zip.GZIPInputStream(
-      new java.io.ByteArrayInputStream(gz)).readAllBytes(), "UTF-8")
+    val chunky = spoolTable(spool).filter(col("log_stream") === "chunky")
+      .select("message", "timestamp").collect()
+    assert(chunky.length === 1)
+    assert(chunky.head.getString(0).contains("split msg"))
+    assert(chunky.head.getLong(1) === 1704412800000L)
+    val json = spoolFiles(spool).map(gunzip)
+      .find(_.contains("\"logStream\":\"chunky\"")).get
     assert(json.contains("split msg"))
     assert(json.contains("\"timestamp\":1704412800000"))
   }
