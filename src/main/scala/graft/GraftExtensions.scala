@@ -36,7 +36,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     Seq(
       unary("graft_frames",
         "RFC6587 de-framing: connection BINARY blob -> ARRAY<BINARY> messages",
-        SyslogFrames),
+        SyslogFrames(_)),
       unary("graft_gzip",
         "gzip level 9 (spool record format): BINARY -> BINARY",
         GzipCompress),

@@ -391,8 +391,10 @@ object TextFunctions {
     // the token total rides a window over the vocabulary-sized frame
     // (r21): the scalar-aggregate + crossJoin spelling made `vocab` a
     // two-consumer node — the corpus token explode + vocab aggregate
-    // ran twice per evaluation (vocab is language-bounded: the same
-    // frame BPE training collects whole to the driver)
+    // ran twice per evaluation. Frame bound (unpartitioned window):
+    // one row per distinct normalized token, so the vocabulary, not
+    // the corpus, sizes its one partition — the same frame BPE
+    // training collects whole to the driver
     val vocab = unigramVocab(spark, dir)
       .withColumn("n_total", sum(col("c")).over(
         org.apache.spark.sql.expressions.Window

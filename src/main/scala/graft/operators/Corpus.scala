@@ -1285,8 +1285,10 @@ object Corpus {
     val d = df.withColumn("w", wCol)
     // `div`, not `/`: Column./ is double division; the oracle's `//`
     // is integer — they must floor identically
-    // the binding total t = min over the #langs-row counts frame rides
-    // an unpartitioned window (r21): the scalar-aggregate + crossJoin
+    // the binding total t = min over the counts frame rides an
+    // unpartitioned window (r21). Frame bound: one row per (lang, w)
+    // with w a function of lang, so ≤ #langs rows (MixWeights' keys
+    // plus null-weight langs). The scalar-aggregate + crossJoin
     // spelling made counts a two-consumer node, running the corpus
     // lang aggregate twice per evaluation
     val counts = d.groupBy("lang", "w").agg(count(lit(1)).as("n"))
@@ -1374,9 +1376,10 @@ object Corpus {
       .withColumn("w",
         floor(sqrt(col("n").cast("double")) * MixTemperatureWeightScale)
           .cast("long"))
-    // totals as window sums over the #langs-row frame (r21, the
+    // totals as window sums over the counts frame (r21, the
     // mixRankFrom rationale): the crossJoin spelling ran the corpus
-    // lang aggregate twice per evaluation
+    // lang aggregate twice per evaluation. Frame bound: one row per
+    // lang (the groupBy key), so ≤ #langs rows
     val wAll = org.apache.spark.sql.expressions.Window
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.unboundedFollowing)
@@ -1696,9 +1699,10 @@ object Corpus {
     * den ≥ 2 so the budget binds (the boundary search assumes at
     * least one capped key). Returns (key, cnt, level, alloc) with
     * Σalloc = budget EXACTLY (division remainder +1 to the first
-    * capped keys in key order). All windows run on the keys-sized
-    * frame — dozens of rows at any corpus scale (documented at the
-    * #129 row). */
+    * capped keys in key order). Frame bound for both unpartitioned
+    * windows: one row per key of `per` (callers pass a frame already
+    * aggregated to one row per source or domain) — dozens of rows at
+    * any corpus scale (documented at the #129 row). */
   private[graft] def waterFillAlloc(per: DataFrame, key: String,
                                     cnt: String, den: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window

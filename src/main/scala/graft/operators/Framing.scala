@@ -33,7 +33,9 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType}
   *  - an incomplete trailing frame (missing bytes or no terminator) is
   *    dropped — in the relay it would wait for more data; on a bounded
   *    blob the stream is complete by construction
-  *  - every emitted message is capped at 6144 bytes (protocol.py:168)
+  *  - every emitted message is capped at `max` bytes, by default
+  *    6144 (protocol.py:168); GELF ingest passes no cap, because a
+  *    GELF chunk datagram may carry up to 8192 bytes
   */
 object Framing {
 
@@ -42,8 +44,8 @@ object Framing {
   private val Cr: Byte = 0x0d
 
   /** Pure automaton over a complete stream blob. */
-  def frameStream(buf: Array[Byte]): Vector[Array[Byte]] = {
-    val max = Constants.MaxMessageLength
+  def frameStream(buf: Array[Byte],
+                  max: Int = Constants.MaxMessageLength): Vector[Array[Byte]] = {
     val out = Vector.newBuilder[Array[Byte]]
     var pos = 0
     val n = buf.length
@@ -80,23 +82,21 @@ object Framing {
               val t = findTermFrom(pos)
               if (t == -1) done = true
               else {
-                if (t > pos) out += buf.slice(pos, math.min(t, pos + max))
+                if (t > pos) out += buf.slice(pos, pos + math.min(t - pos, max))
                 pos = t + 1
               }
             case Some(len0) =>
+              // Long sums: an octet count near Int.MaxValue must not
+              // overflow into a negative position
               val keep = math.min(len0, max)
-              val discard = len0 - keep
               val start = sp + 1
-              if (start + keep + discard > n && start + keep > n) {
+              if (start.toLong + keep > n) {
                 done = true // not enough bytes buffered for the message
-              } else if (start + len0 > n) {
-                // message bytes present but discard tail incomplete:
-                // emit the truncated message, consume what exists
-                if (keep > 0) out += buf.slice(start, start + keep)
-                pos = n
               } else {
                 if (keep > 0) out += buf.slice(start, start + keep)
-                pos = start + keep + discard
+                // a discard tail cut short by the blob's end: consume
+                // what exists
+                pos = math.min(start.toLong + len0, n.toLong).toInt
               }
           }
         }
@@ -104,7 +104,7 @@ object Framing {
         val t = findTermFrom(pos)
         if (t == -1) done = true
         else {
-          if (t > pos) out += buf.slice(pos, math.min(t, pos + max))
+          if (t > pos) out += buf.slice(pos, pos + math.min(t - pos, max))
           pos = t + 1
         }
       }
@@ -114,29 +114,30 @@ object Framing {
 
   /** [[frameStream]] boxed for Catalyst — shared by the interpreted
     * eval and the generated code. */
-  def frameStreamData(buf: Array[Byte]): GenericArrayData =
-    new GenericArrayData(frameStream(buf).toArray)
+  def frameStreamData(buf: Array[Byte], max: Int): GenericArrayData =
+    new GenericArrayData(frameStream(buf, max).toArray)
 
   /** Catalyst expression: BINARY blob → ARRAY<BINARY> of messages.
     * The automaton is iterative JVM code, but doGenCode keeps the
     * stage in whole-stage codegen as a static call (a CodegenFallback
     * here forced an InternalRow materialization + interpreted eval on
     * the relay's hottest map stage). */
-  case class SyslogFrames(child: Expression) extends UnaryExpression {
+  case class SyslogFrames(child: Expression,
+                          max: Int = Constants.MaxMessageLength) extends UnaryExpression {
     import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
     override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
     override def nullSafeEval(v: Any): Any =
-      frameStreamData(v.asInstanceOf[Array[Byte]])
+      frameStreamData(v.asInstanceOf[Array[Byte]], max)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       defineCodeGen(ctx, ev, c =>
-        s"graft.operators.Framing$$.MODULE$$.frameStreamData($c)")
+        s"graft.operators.Framing$$.MODULE$$.frameStreamData($c, $max)")
     override protected def withNewChildInternal(c: Expression): SyslogFrames =
       copy(child = c)
   }
 
-  def syslogFrames(c: Column): Column =
+  def syslogFrames(c: Column, max: Int = Constants.MaxMessageLength): Column =
     org.apache.spark.sql.graft.Exprs.toColumn(
-      SyslogFrames(org.apache.spark.sql.graft.Exprs.toExpression(c)))
+      SyslogFrames(org.apache.spark.sql.graft.Exprs.toExpression(c), max))
 
   /** GELF datagram framing dispatch (reference: protocol.py:221-261):
     * `{` → newline-framed JSON messages; zlib (0x78) / gzip (0x1f8b)

@@ -190,24 +190,6 @@ object MediaHash {
        |END""".stripMargin
   }
 
-  /** The production hash kernel: ONE mapPartitions pass folding each
-    * asset's bytes into the 64 cells and assembling the 4 bands
-    * in-task — the #114 batched-iterator shape. The [[bandsDf]]
-    * explode/aggregate spelling fans each asset out to ~1 row per
-    * byte through two aggregates; this kernel keeps the fold row-local
-    * (no fan-out, no per-byte shuffle state), which is the same
-    * argument that put the streaming twin on [[ahashInRowSql]] — and
-    * unlike the HOF fold it runs at array speed, no per-step slot
-    * copies. Spec-pinned value-equal to the explode/aggregate kernel
-    * on every corpus asset; the DuckDB oracle keeps the hex-fold
-    * spelling ([[hashCtes]]) as the independent replay.
-    *
-    * The kernel folds IN PLACE (r22): executor-width spread is the
-    * content frame's contract — [[assets]]/[[gAssets]] carry it on
-    * their slim pre-join side — so the assembled content bytes are
-    * never re-shuffled per fold (the former repartition(doc_id) here
-    * cost one full content move per kernel, two for the union/
-    * pipeline paths that fold one pinned corpus twice). */
   /** The per-asset fold itself: bytes → 4 banded hash words. Shared
     * by the batch kernel and the streaming ingest gate
     * ([[graft.streaming.MediaHashStream.bandRows]]) so they can never
@@ -231,6 +213,28 @@ object MediaHash {
     bands
   }
 
+  /** The production hash kernel: ONE mapPartitions pass folding each
+    * asset's bytes into the 64 cells and assembling the 4 bands
+    * in-task — the #114 batched-iterator shape. The [[bandsDf]]
+    * explode/aggregate spelling fans each asset out to ~1 row per
+    * byte through two aggregates; this kernel keeps the fold row-local
+    * (no fan-out, no per-byte shuffle state), which is the same
+    * argument that put the streaming twin on [[ahashInRowSql]] — and
+    * unlike the HOF fold it runs at array speed, no per-step slot
+    * copies. Spec-pinned value-equal to the explode/aggregate kernel
+    * on every corpus asset; the DuckDB oracle keeps the hex-fold
+    * spelling ([[hashCtes]]) as the independent replay.
+    *
+    * Input-width contract: the kernel folds IN PLACE, with no
+    * repartition, so it runs on exactly the partitions of `assets`
+    * (doc_id, content), which must already be spread to executor
+    * width. [[assets]]/[[gAssets]] meet it on their slim pre-join
+    * side, so the assembled content bytes are never re-shuffled per
+    * fold (a repartition(doc_id) here cost one full content move per
+    * kernel, two for the union/pipeline paths that fold one pinned
+    * corpus twice). A frame with fewer partitions than
+    * `defaultParallelism` folds on that many cores: spread it before
+    * calling. [[ghashKernel]] has the same contract. */
   private[graft] def ahashKernel(assets: DataFrame): DataFrame = {
     val spark = assets.sparkSession
     import spark.implicits._
@@ -1126,8 +1130,9 @@ object MediaHash {
        |)""".stripMargin
 
   /** The gHash production kernel: one mapPartitions pass per asset
-    * (the ahashKernel shape over [[ghashBands]], folding in place —
-    * width is the content frame's contract, see [[ahashKernel]]). */
+    * (the ahashKernel shape over [[ghashBands]], folding in place).
+    * Input-width contract as in [[ahashKernel]]: `assets` must already
+    * be spread to executor width; the output keeps its partitions. */
   private[graft] def ghashKernel(assets: DataFrame): DataFrame = {
     val spark = assets.sparkSession
     import spark.implicits._

@@ -79,7 +79,8 @@ object Unigram {
       .orderBy(col("c").desc, col("piece")).limit(SubK)
     val kept = chars.unionAll(multi)
     // n_total as an unpartitioned window over the MODEL-sized kept
-    // frame (≤ chars + SubK rows — the waterFill/NTILE precedent),
+    // frame. Frame bound: ≤ distinct chars + SubK rows (`multi` is
+    // limited to SubK above) — the waterFill/NTILE precedent,
     // r21: the former scalar-aggregate + crossJoin made `kept` a
     // two-consumer frame, so the whole substring-explode aggregation
     // chain above ran TWICE per evaluation (once for the total, once
@@ -354,8 +355,10 @@ object Unigram {
       .select(col("piece"),
         greatest(coalesce(col("c"), lit(0L)), lit(1L)).as("c"))
     val mc = counts.filter(length(col("piece")) > 1)
-    // model-sized global window (≤ SubK rows) — the same single-
-    // partition sort pieceCosts' top-SubK limit already does. r21:
+    // model-sized global windows. Frame bound: every counted piece
+    // comes from `inv`, the previous model (≤ distinct chars + SubK
+    // rows), so `mc` has ≤ SubK rows and `kept` ≤ chars + SubK — the
+    // same single-partition sort pieceCosts' top-SubK limit does. r21:
     // the multi-piece count rides the SAME window pass (count over
     // the whole frame) instead of a separate scalar aggregate +
     // crossJoin whose subplan re-ran the DP/back-walk counts chain.

@@ -20,10 +20,11 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong}
   *    none beyond the file being filled.
   *  - Framing/parse/envelope stay the Spark operators they already
   *    are (Framing.scala #9-11, Syslog/Gelf parse, SyslogPipeline):
-  *    `readStream.text`/`binaryFile` tails the directory and the SAME
-  *    oracle-verified expressions process the bytes. This is the
-  *    "connection byte-stream modeled as a row" contract SURVEY §1
-  *    documents, made live.
+  *    `SyslogPipeline.parsed` tails every listener's directory as a
+  *    `binaryFile` stream, one row per file, and the SAME
+  *    oracle-verified RFC 6587 automaton de-frames TCP, TLS and UDP
+  *    bytes alike. This is the "connection byte-stream modeled as a
+  *    row" contract SURVEY §1 documents, made live.
   *
   * Publication contract (shared with SpoolWriter): bytes accumulate
   * in a dot-prefixed temp file, which is RENAMED to its final name on
@@ -37,7 +38,7 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong}
   * Datagram framing: UDP has no byte-stream; each datagram is
   * published RFC6587-octet-counted (`<len> <bytes>`) into the
   * rotation file, so the existing octet de-framer (#9 frame_octet /
-  * Framing.frameOctetBytes) recovers exact datagram boundaries —
+  * Framing.syslogFrames) recovers exact datagram boundaries —
   * GELF chunk datagrams survive byte-for-byte, compressed payloads
   * included. (The reference's UDP protocol likewise treats each
   * datagram as one message, protocol.py DatagramSyslogProtocol.)

@@ -1,10 +1,14 @@
 package graft.streaming
 
 import graft.Constants
+import graft.functions.BinaryFunctions.decompress_auto
+import graft.functions.GelfFunctions.gelf_chunk_parse
 import graft.functions.SyslogFunctions._
+import graft.operators.Framing
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming re-expression of the relay pipeline
   * (SURVEY §2 #20): listener → frame → parse → envelope → sink.
@@ -14,35 +18,93 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * 60 s into gzip spool records (reference: kinesyslog/server.py,
   * sink.py:120-217). Spark-first mapping:
   *
-  *  - listener        → `readStream` file/socket source (one line per
-  *                      framed message; framing of raw byte streams is
-  *                      the batch operator `Framing.syslogFrames`)
+  *  - listener        → [[parsed]]: a `binaryFile` stream over the
+  *                      listener's ingest directory, one row per
+  *                      connection file, de-framed by the RFC 6587
+  *                      automaton `Framing.syslogFrames` — the same
+  *                      read for TCP, TLS and UDP
   *  - parse/envelope  → the SAME codegen'd column functions the batch
   *                      path uses (SyslogFunctions) — one
   *                      implementation, two execution modes
-  *  - FLUSH_TIME 60 s → 60-second event-time tumbling window with a
-  *                      2-minute watermark (late messages join their
-  *                      window until the watermark passes; the relay's
-  *                      timer flush becomes watermark-driven emission)
   *  - gzip spool      → the `graft-spool` streaming sink
   *                      ([[spoolDirQuery]]): per (source, dest), build
   *                      the CloudWatch record JSON, gzip it at level 9
   *                      and publish one spool file per record
   *
-  * Scale: stateless map for parse; the only stateful operator is the
-  * windowed aggregation, keyed (window, hostname) — state size is
-  * bounded by watermark horizon × key cardinality, and Spark evicts
-  * state past the watermark. No driver-side buffering.
+  * Scale: de-framing and parse are a stateless map; the only stateful
+  * operator is GELF-over-UDP chunk reassembly ([[GelfChunkStream]]),
+  * whose state the reassembly-window watermark bounds. No driver-side
+  * buffering.
   */
 object SyslogPipeline {
 
-  /** File-based listener: every file is a connection's framed output,
-    * one message per line. */
-  def parsedStream(spark: SparkSession, inputDir: String): DataFrame = {
-    val lines = spark.readStream
-      .option("maxFilesPerTrigger", 16)
-      .text(inputDir)
-    parseLines(lines)
+  /** binaryFile's fixed schema, stated because a streaming source
+    * infers none. */
+  private val IngestSchema = new StructType()
+    .add("path", "string").add("modificationTime", "timestamp")
+    .add("length", "long").add("content", "binary")
+
+  /** Ingest files per micro-batch, the same for every listener kind. */
+  private val MaxFilesPerTrigger = 16
+
+  /** The one ingest read: every file in `ingestDir` is one
+    * connection's bytes (TCP/TLS) or a run of `<len> <datagram>`
+    * frames (UDP), and the RFC 6587 automaton de-frames both
+    * (octet counting, else LF/NUL/CR terminators). Syslog frames keep
+    * the 6144-byte cap; GELF frames are uncapped. With `gelf` and
+    * `udp`, each datagram goes through the reference's GELF datagram
+    * dispatch (protocol.py:281-300): a chunk (magic 0x1e0f) joins
+    * [[GelfChunkStream]]'s cross-micro-batch reassembly, anything
+    * else is one document, inflated when zlib/gzip. GELF over TCP has
+    * no chunking, so that query stays stateless.
+    *
+    * A closed connection's last message often has no terminator: a
+    * blob whose last byte is not LF/NUL/CR gets one NUL appended, so
+    * the automaton frames that tail instead of waiting for more bytes.
+    * NUL rather than LF, because the automaton prefers LF to NUL: an
+    * appended LF would glue an unterminated NUL-framed tail into one
+    * message.
+    *
+    * `proxy` (reference proxy.wrap + init.py:199-205): the listener
+    * peeled each connection's PROXY preamble and put the advertised
+    * peer in the file name (`-src-<addr>-`), which here replaces the
+    * parsed hostname as the message source (→ logStream, sink.py:163)
+    * via a map-side path extract. An untagged file (v2 LOCAL, or a
+    * UDP file) falls back to the parsed hostname. */
+  def parsed(spark: SparkSession, ingestDir: String, gelf: Boolean,
+             udp: Boolean = false, proxy: Boolean = false): DataFrame = {
+    val content = col("content")
+    val closed = when(substring(content, -1, 1).isin(
+        Array[Byte](0x0a), Array[Byte](0x00), Array[Byte](0x0d)), content)
+      .otherwise(concat(content, lit(Array[Byte](0x00))))
+    def frames: DataFrame =
+      spark.readStream.format("binaryFile").schema(IngestSchema)
+        .option("maxFilesPerTrigger", MaxFilesPerTrigger).load(ingestDir)
+        .select(explode(Framing.syslogFrames(closed,
+            if (gelf) Int.MaxValue else Constants.MaxMessageLength)).as("datagram"),
+          col("modificationTime").as("event_time"), col("path"))
+    val lines =
+      if (gelf && udp) gelfDatagrams(frames)
+      else frames.select(col("datagram").cast("string").as("value"), col("path"))
+    // [^/]+ keeps the capture in the basename: a work dir whose PATH
+    // contains "-src-" must never fabricate a tag
+    val tag = regexp_extract(col("path"), "-src-([^/]+)-\\d{5}\\.dat$", 1)
+    val source = Option.when(proxy)(when(tag =!= "", translate(tag, "_", ":")))
+    if (gelf) parseGelfLines(lines, source) else parseLines(lines, source)
+  }
+
+  /** GELF datagrams → one JSON document each: chunks reassembled,
+    * whole documents inflated when compressed. `frames` is read once
+    * per arm: the query has two sources, and a restart from a
+    * checkpoint must keep its source count. */
+  private def gelfDatagrams(frames: => DataFrame): DataFrame = {
+    val isChunk = gelf_chunk_parse(col("datagram")).isNotNull
+    val whole = frames.filter(!isChunk)
+      .select(decompress_auto(col("datagram")).cast("string").as("value"),
+        col("path"))
+    val assembled = GelfChunkStream.assembleDatagrams(frames.filter(isChunk))
+      .toDF().select(col("message").as("value"), lit(null).cast("string").as("path"))
+    whole.unionAll(assembled)
   }
 
   /** Shared with tests (works on both streaming and batch frames).
@@ -73,40 +135,6 @@ object SyslogPipeline {
           (unix_timestamp(current_timestamp()) * 1000)).as("ts_ms"))
       .withColumn("event_time", timestamp_millis(col("ts_ms")))
 
-  /** GELF listener: newline-framed GELF JSON datagrams (the
-    * reference's TCP GELF framing after decompression,
-    * protocol.py:246-261); parse + the reference's timestamp fallback
-    * chain, projected to the same (message, hostname, ts_ms,
-    * event_time) shape the sinks consume — one sink implementation
-    * serves both message classes, exactly as the reference's
-    * MessageSink does. */
-  def parsedGelfStream(spark: SparkSession, inputDir: String): DataFrame = {
-    val lines = spark.readStream
-      .option("maxFilesPerTrigger", 16)
-      .text(inputDir)
-    parseGelfLines(lines)
-  }
-
-  /** Chunked-GELF listener: binary chunk datagrams (12-byte headers)
-    * reassembled ACROSS micro-batches by [[GelfChunkStream]] keyed
-    * state, then parsed into the same shared sink shape — so a
-    * message whose chunks land in different micro-batches is no
-    * longer dropped (reference accumulates chunks across datagrams,
-    * protocol.py:289-300). Input: parquet stream of (datagram binary,
-    * event_time timestamp). */
-  def parsedChunkedGelfStream(spark: SparkSession, inputDir: String,
-                              maxFilesPerTrigger: Int = 16): DataFrame = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("datagram", org.apache.spark.sql.types.BinaryType)
-      .add("event_time", org.apache.spark.sql.types.TimestampType)
-    val dgrams = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inputDir)
-    val assembled = GelfChunkStream.assembleDatagrams(dgrams)
-    parseGelfLines(assembled.toDF().select(col("message").as("value")))
-  }
-
   /** Shared with tests (works on both streaming and batch frames).
     * `sourceOverride` as in [[parseLines]]. */
   def parseGelfLines(lines: DataFrame,
@@ -122,22 +150,6 @@ object SyslogPipeline {
         coalesce(round(col("j.timestamp") * 1000).cast("long"),
           unix_timestamp(current_timestamp()) * 1000).as("ts_ms"))
       .withColumn("event_time", timestamp_millis(col("ts_ms")))
-
-  /** FLUSH_TIME-shaped windowed aggregation with watermark; the
-    * window length follows RelayConfig.flushSeconds. */
-  def windowedCounts(parsed: DataFrame,
-                     flushSeconds: Int = graft.Constants.FlushTime): DataFrame =
-    parsed
-      .withWatermark("event_time", s"${2 * flushSeconds} seconds")
-      .groupBy(
-        window(col("event_time"), s"$flushSeconds seconds"),
-        col("hostname"))
-      .agg(
-        count(lit(1)).as("n_messages"),
-        sum(length(col("message")).cast("long")).as("n_bytes"))
-      .select(
-        col("window.start").cast("long").as("window_start_s"),
-        col("hostname"), col("n_messages"), col("n_bytes"))
 
   /** Spool sink: the parsed stream written as REAL spool files
     * through the `graft-spool` streaming sink — one gzip CloudWatch
@@ -172,13 +184,4 @@ object SyslogPipeline {
       .option("maxRecordBytes", maxRecordBytes.toString)
       .trigger(Trigger.AvailableNow())
       .start(spoolDir)
-
-  /** Windowed-count sink for tests/metrics (in-memory table). */
-  def countsQuery(parsed: DataFrame, tableName: String): StreamingQuery =
-    windowedCounts(parsed).writeStream
-      .format("memory")
-      .queryName(tableName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
 }

@@ -5,7 +5,7 @@ import java.io.File
 import graft.RelayConfig
 import graft.sources.SocketIngest
 import graft.streaming.{BatchTransport, FilesystemTransport, SpoolDrainStream, SyslogPipeline}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The one-command relay runner (reference init.py:148-280 `listen` +
@@ -18,8 +18,10 @@ import org.apache.spark.sql.functions._
   * the reference's own flag names.
   *
   * Reference → graft mapping, listener by listener (init.py:193-208):
-  *  - `--tcp-port`  → [[SocketIngest.TcpIngest]], newline/octet-framed
-  *    syslog or newline-framed GELF lines into the port's ingest dir
+  *  - `--tcp-port`  → [[SocketIngest.TcpIngest]]: the connection's
+  *    bytes into the port's ingest dir, de-framed by
+  *    [[SyslogPipeline.parsed]] (RFC 6587 octet counting or LF/NUL/CR
+  *    terminators; syslog or GELF per `--gelf`)
   *  - `--tls-port`  → the same TcpIngest over an `SSLServerSocket`
   *    built from `--cert`/`--key` (server.py:46-52 SecureServer)
   *  - `--udp-port`  → [[SocketIngest.UdpIngest]]; each datagram is
@@ -73,7 +75,8 @@ object RelayMain {
       } else None
 
     /** (kind, requestedPort, ingestDir, listener) — TCP and TLS share
-      * the TcpIngest byte mover; kind selects the parse wiring. */
+      * the TcpIngest byte mover; kind names the ingest dir and the
+      * spool checkpoint. */
     val tcpListeners: Seq[(String, Int, String, SocketIngest.TcpIngest)] =
       (config.tcpPorts.filter(_ != 0).map(("tcp", _)) ++
         config.tlsPorts.filter(_ != 0).map(("tls", _))).map {
@@ -123,70 +126,6 @@ object RelayMain {
     def bytesIn: Long = tcpListeners.map(_._4.bytesIn).sum
     def datagramsIn: Long = udpListeners.map(_._3.received).sum
 
-    /** The per-port parsed stream: text lines for TCP/TLS, de-framed
-      * datagrams for UDP; GELF or syslog parse per `config.gelf`
-      * (init.py:180-189 selects the message class the same way).
-      *
-      * GELF over UDP is the reference's actual graylog input path
-      * (protocol.py:281-300 DatagramGelfProtocol): each datagram is
-      * either a CHUNK (magic 0x1e0f — accumulate per message id,
-      * reassemble when all parts arrive, and only THEN magic-sniff +
-      * decompress, because senders compress the whole document and
-      * chunk the compressed bytes) or a whole GELF document, possibly
-      * zlib/gzip compressed. Both arms ride the already-proven
-      * components: #8b's chunk parse + [[GelfChunkStream]]'s keyed
-      * cross-micro-batch reassembly, and #12's decompress sniff. */
-    private def parsedFor(kind: String, dir: String, port: Int): DataFrame = {
-      // binaryFile's schema is fixed, but the STREAMING source
-      // requires it stated (no inference on streams)
-      val binarySchema = new org.apache.spark.sql.types.StructType()
-        .add("path", "string").add("modificationTime", "timestamp")
-        .add("length", "long").add("content", "binary")
-      def frames: DataFrame =
-        spark.readStream.format("binaryFile").schema(binarySchema).load(dir)
-          .select(explode(graft.operators.Framing.syslogFrames(
-            col("content"))).as("datagram"),
-            col("modificationTime").as("event_time"))
-      if (kind == "udp" && config.gelf) {
-        val isChunk = graft.functions.GelfFunctions
-          .gelf_chunk_parse(col("datagram")).isNotNull
-        val whole = frames.filter(!isChunk)
-          .select(graft.functions.BinaryFunctions
-            .decompress_auto(col("datagram")).cast("string").as("value"))
-        val assembled = graft.streaming.GelfChunkStream
-          .assembleDatagrams(frames.filter(isChunk))
-          .toDF().select(col("message").as("value"))
-        return SyslogPipeline.parseGelfLines(whole.unionAll(assembled))
-      }
-      val lines = kind match {
-        case "udp" =>
-          frames.select(col("datagram").cast("string").as("value"))
-        case _ => spark.readStream.option("maxFilesPerTrigger", 16).text(dir)
-      }
-      // PROXY ports (reference proxy.wrap + init.py:199-205): the
-      // listener already peeled the v1/v2 preamble and put the
-      // ADVERTISED peer in the connection's file names; here it
-      // becomes the message source (→ logStream, sink.py:163) via a
-      // map-side path extract — no join, no state, any scale. A
-      // connection without a tag (v2 LOCAL command) falls back to
-      // the parsed hostname.
-      val sourceOverride =
-        if (config.proxyProtocolPorts.contains(port) && kind != "udp") {
-          // [^/]+ restricts the capture to the basename: a work dir
-          // whose PATH contains "-src-" must never fabricate a tag
-          val tagged = regexp_extract(col("ingest_path"),
-            "-src-([^/]+)-\\d{5}\\.dat$", 1)
-          Some(when(tagged =!= "", translate(tagged, "_", ":")))
-        } else None
-      val withPath =
-        if (sourceOverride.isDefined)
-          lines.select(col("value"),
-            col("_metadata.file_path").as("ingest_path"))
-        else lines
-      if (config.gelf) SyslogPipeline.parseGelfLines(withPath, sourceOverride)
-      else SyslogPipeline.parseLines(withPath, sourceOverride)
-    }
-
     /** One flush pass: every listener's ingest dir → parse → spool
       * files, then spool → pack → ship (+ one retry generation), all
       * incremental against durable checkpoints. Returns the drain-log
@@ -209,7 +148,8 @@ object RelayMain {
           ("udp", port, dir, l.boundPort)
         }).map { case (kind, port, dir, bound) =>
           SyslogPipeline.spoolDirQuery(
-            parsedFor(kind, dir, port)
+            SyslogPipeline.parsed(spark, dir, config.gelf, udp = kind == "udp",
+                proxy = config.proxyProtocolPorts.contains(port))
               .repartition(col("hostname")),
             config.spoolDir,
             s"${dirs.checkpointRoot}/spool-$kind-$port",

@@ -13,13 +13,15 @@ import org.apache.spark.sql.functions._
   * 80k msg/s single-thread hot path (BASELINE.md). This main measures
   * the two streaming pipelines that mirror that loop:
   *
-  *  - `syslog_spool`: pre-rendered syslog lines (the listener's byte
-  *    stream) → [[graft.streaming.SyslogPipeline.parsedStream]] →
+  *  - `syslog_spool`: pre-rendered LF-terminated syslog files (the
+  *    listener's ingest files) → [[graft.streaming.SyslogPipeline.parsed]]
+  *    (the relay's one ingest read: RFC 6587 de-framing, then parse) →
   *    REAL spool files via `spoolDirQuery` — listener → parse →
   *    envelope → gzip spool, the reference's full relay loop.
-  *  - `gelf_reassembly`: binary chunk datagrams →
+  *  - `gelf_reassembly`: a parquet stream of binary chunk datagrams →
   *    [[graft.streaming.GelfChunkStream]] keyed-state reassembly →
-  *    GELF parse → noop sink — the stateful path.
+  *    `parseGelfLines` → noop sink — the stateful path, without the
+  *    ingest read.
   *
   * Harness: input is rendered to files UP FRONT (setup, untimed — the
   * reference harness also parses pre-rendered lines); each pipeline
@@ -528,6 +530,9 @@ object StreamBench {
       .write.mode("overwrite").parquet(gelfIn.getAbsolutePath)
     val nMessages = spark.read.parquet(gelfIn.getAbsolutePath)
       .select("id").distinct().count()
+    val dgramSchema = new org.apache.spark.sql.types.StructType()
+      .add("datagram", org.apache.spark.sql.types.BinaryType)
+      .add("event_time", org.apache.spark.sql.types.TimestampType)
 
     // ---- syslog relay loop: listener → parse → spool files -----------
     // repartition by stream before the sink (the SpoolWriter contract:
@@ -537,8 +542,8 @@ object StreamBench {
       val spool = freshDir(root, "spool")
       val cp = freshDir(root, "cp-syslog")
       val q = graft.streaming.SyslogPipeline.spoolDirQuery(
-        graft.streaming.SyslogPipeline.parsedStream(
-            spark, syslogIn.getAbsolutePath)
+        graft.streaming.SyslogPipeline.parsed(
+            spark, syslogIn.getAbsolutePath, gelf = false)
           .repartition(col("hostname")),
         spool.getAbsolutePath, cp.getAbsolutePath)
       q.awaitTermination(600000)
@@ -548,8 +553,11 @@ object StreamBench {
     // ---- chunked GELF: keyed-state reassembly + parse ----------------
     val gelfSec = timePasses { () =>
       val cp = freshDir(root, "cp-gelf")
-      val q = graft.streaming.SyslogPipeline.parsedChunkedGelfStream(
-          spark, gelfIn.getAbsolutePath)
+      val dgrams = spark.readStream.schema(dgramSchema)
+        .option("maxFilesPerTrigger", 16).parquet(gelfIn.getAbsolutePath)
+      val q = graft.streaming.SyslogPipeline.parseGelfLines(
+          graft.streaming.GelfChunkStream.assembleDatagrams(dgrams)
+            .toDF().select(col("message").as("value")))
         .writeStream
         .format("noop")
         .option("checkpointLocation", cp.getAbsolutePath)

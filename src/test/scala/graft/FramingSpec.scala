@@ -48,6 +48,21 @@ class FramingSpec extends SparkSpec {
     assert(out(1) === "after")
   }
 
+  test("uncapped framing (GELF ingest) keeps 7000-byte messages whole") {
+    val big = "y" * 7000
+    def uncapped(s: String): Vector[String] =
+      frameStream(s.getBytes("UTF-8"), Int.MaxValue).map(new String(_, "UTF-8"))
+    assert(uncapped(s"7000 ${big}5 after") === Vector(big, "after"))
+    assert(uncapped(s"$big\nok\n") === Vector(big, "ok"))
+  }
+
+  test("an octet count near Int.MaxValue is an incomplete tail, capped or not") {
+    val s = "5 hello2147483647 xyz"
+    assert(frames(s) === Vector("hello"))
+    assert(frameStream(s.getBytes("UTF-8"), Int.MaxValue)
+      .map(new String(_, "UTF-8")) === Vector("hello"))
+  }
+
   test("incomplete octet tail is dropped") {
     assert(frames("100 short") === Vector.empty)
     assert(frames("123") === Vector.empty)

@@ -49,7 +49,7 @@ class RelayLiveSpec extends SparkSpec {
     // 2. streaming relay: tail the listener's files, parse, envelope,
     //    write REAL spool files (per-stream partitioning as prod would)
     val q = streaming.SyslogPipeline.spoolDirQuery(
-      streaming.SyslogPipeline.parsedStream(spark, ingestDir.getAbsolutePath)
+      streaming.SyslogPipeline.parsed(spark, ingestDir.getAbsolutePath, gelf = false)
         .repartition(org.apache.spark.sql.functions.col("hostname")),
       spoolDir.getAbsolutePath,
       new File(root, "cp-relay").getAbsolutePath)
@@ -517,5 +517,137 @@ class RelayLiveSpec extends SparkSpec {
       assert(spooled.map(_.getString(1)).toSet ===
         (1 to 3).map(i => s"gelf-host-$i").toSet)
     } finally relay.stop()
+  }
+
+  // --- RelayMain framing: every listener de-frames by RFC 6587 ---
+
+  /** One relay over a fresh work dir `name`: `send` writes to the
+    * relay's bound ports and returns the (TCP/TLS bytes, UDP datagrams) it
+    * sent; once they have landed, the listeners stop, one drain pass
+    * runs, and the spooled (log_stream, message) rows come back. */
+  private def relayRun(name: String, config: File => RelayConfig)(
+      send: (tools.RelayMain.Relay, RelayConfig) => (Long, Long)): Seq[(String, String)] = {
+    val root = new File(sys.props("java.io.tmpdir"),
+      s"graft-relaymain-$name-${spark.sparkContext.applicationId}")
+    org.apache.commons.io.FileUtils.deleteQuietly(root)
+    root.mkdirs()
+    val spoolDir = new File(root, "spool")
+    val cfg = config(root).copy(spoolDir = spoolDir.getAbsolutePath)
+    val relay = new tools.RelayMain.Relay(spark, cfg,
+      tools.RelayMain.RelayDirs(root.getAbsolutePath),
+      new streaming.FilesystemTransport(
+        new File(root, "delivered").getAbsolutePath))
+    relay.start()
+    try {
+      val (bytes, datagrams) = send(relay, cfg)
+      val deadline = System.currentTimeMillis() + 15000
+      while ((relay.bytesIn < bytes || relay.datagramsIn < datagrams)
+          && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(relay.bytesIn === bytes)
+      assert(relay.datagramsIn === datagrams)
+      relay.tcpListeners.foreach(_._4.stop())
+      relay.udpListeners.foreach(_._3.stop())
+      relay.drainOnce()
+      spark.read.format("graft-spool").load(spoolDir.getAbsolutePath)
+        .select("log_stream", "message").collect()
+        .map(r => (r.getString(0), r.getString(1))).toSeq
+    } finally relay.stop()
+  }
+
+  private def tcpSend(port: Int, writes: Seq[Array[Byte]]): Long = {
+    val s = new Socket("127.0.0.1", port)
+    try writes.foreach(s.getOutputStream.write) finally s.close()
+    writes.map(_.length.toLong).sum
+  }
+
+  private def udpSend(port: Int, datagrams: Seq[Array[Byte]]): Long = {
+    val sock = new java.net.DatagramSocket()
+    val addr = java.net.InetAddress.getByName("127.0.0.1")
+    try datagrams.foreach(b =>
+      sock.send(new java.net.DatagramPacket(b, b.length, addr, port)))
+    finally sock.close()
+    datagrams.length.toLong
+  }
+
+  test("RelayMain TLS: octet-counted syslog, several frames per write, no LF (RFC 5425)") {
+    val msgs = (1 to 6).map(i =>
+      s"<${i * 17 % 192}>1 2024-01-05T10:00:1${i}Z tls-octet-$i app - - frame $i")
+    val frames = msgs.map(m => s"${m.getBytes("UTF-8").length} $m")
+    val spooled = relayRun("tlsoctet", { root =>
+      val (cert, key) = genCertKey(root)
+      RelayConfig(tcpPorts = Seq(0), tlsPorts = Seq(freePort()),
+        certFile = Some(cert), keyFile = Some(key))
+    }) { (relay, cfg) =>
+      val writes = Seq(frames.take(3), frames.drop(3))
+        .map(_.mkString.getBytes("UTF-8"))
+      val secure = tlsClient(cfg.certFile.get, relay.boundPorts("tls").head)
+      try writes.foreach { w =>
+        secure.getOutputStream.write(w); secure.getOutputStream.flush()
+      } finally secure.close()
+      (writes.map(_.length.toLong).sum, 0L)
+    }
+    // each message once, without its length prefix
+    assert(spooled.map(_._2).sorted === msgs.sorted)
+    assert(spooled.map(_._1).toSet === (1 to 6).map(i => s"tls-octet-$i").toSet)
+  }
+
+  test("RelayMain gelf TCP: NUL-delimited documents land one each") {
+    val docs = (1 to 3).map(i =>
+      s"""{"version":"1.1","host":"nul-host-$i","short_message":"nul $i","timestamp":17000000$i.5}""")
+    val spooled = relayRun("gelfnul", _ => RelayConfig(gelf = true,
+        tcpPorts = Seq(freePort()), tlsPorts = Seq(0))) { (relay, _) =>
+      (tcpSend(relay.boundPorts("tcp").head,
+        Seq(docs.map(_ + "\u0000").mkString.getBytes("UTF-8"))), 0L)
+    }
+    assert(spooled.map(_._2).sorted === docs.sorted)
+    assert(spooled.map(_._1).toSet === (1 to 3).map(i => s"nul-host-$i").toSet)
+  }
+
+  test("RelayMain gelf UDP: a 7,000-byte datagram and 8,000-byte chunks land intact") {
+    def doc(host: String, body: String): String =
+      s"""{"version":"1.1","host":"$host","short_message":"$body"}"""
+    val big = doc("udp-big", "")
+    val plain = doc("udp-big", "p" * (7000 - big.length))
+    // incompressible body: the zlib'd document spans several chunks
+    val packedDoc = doc("udp-chunked",
+      new scala.util.Random(7).alphanumeric.take(20000).mkString)
+    val packed = graft.functions.BinaryFunctions.zlib6(packedDoc.getBytes("UTF-8"))
+    val chunks = packed.grouped(8000).toSeq.zipWithIndex.map { case (part, seq) =>
+      val bb = java.nio.ByteBuffer.allocate(12 + part.length)
+      bb.put(0x1e.toByte).put(0x0f.toByte).putLong(0x0123456789abcdefL)
+        .put(seq.toByte).put(((packed.length + 7999) / 8000).toByte).put(part)
+      bb.array()
+    }
+    assert(plain.length === 7000)
+    assert(chunks.length >= 2 && chunks.head.length === 12 + 8000)
+    val spooled = relayRun("gelfbig", _ => RelayConfig(gelf = true,
+        udpPorts = Seq(freePort()), tcpPorts = Seq(0), tlsPorts = Seq(0))) { (relay, _) =>
+      (0L, udpSend(relay.boundPorts("udp").head,
+        plain.getBytes("UTF-8") +: chunks))
+    }
+    assert(spooled.map(_._2).sorted === Seq(plain, packedDoc).sorted)
+    assert(spooled.map(_._1).toSet === Set("udp-big", "udp-chunked"))
+  }
+
+  test("RelayMain TCP: a 7,000-byte syslog message lands truncated to 6,144 bytes") {
+    val head = "<13>Feb  5 17:32:10 long-host "
+    val msg = head + "x" * (7000 - head.length)
+    val spooled = relayRun("truncate", _ => RelayConfig(
+        tcpPorts = Seq(freePort()), tlsPorts = Seq(0))) { (relay, _) =>
+      (tcpSend(relay.boundPorts("tcp").head,
+        Seq((msg + "\n").getBytes("UTF-8"))), 0L)
+    }
+    assert(spooled === Seq("long-host" -> msg.take(Constants.MaxMessageLength)))
+  }
+
+  test("RelayMain TCP: an LF-framed stream's unterminated last line lands whole") {
+    val msgs = (1 to 3).map(i => s"<13>Feb  5 17:32:1$i tail-host-$i line $i")
+    val spooled = relayRun("tail", _ => RelayConfig(
+        tcpPorts = Seq(freePort()), tlsPorts = Seq(0))) { (relay, _) =>
+      (tcpSend(relay.boundPorts("tcp").head,
+        Seq(msgs.mkString("\n").getBytes("UTF-8"))), 0L)
+    }
+    assert(spooled.map(_._2).sorted === msgs.sorted)
   }
 }

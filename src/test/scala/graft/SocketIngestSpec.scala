@@ -18,6 +18,15 @@ class SocketIngestSpec extends SparkSpec {
     d
   }
 
+  /** The relay's ingest read over `dir`, drained once into a table. */
+  private def ingested(dir: File, name: String) = {
+    val q = streaming.SyslogPipeline.parsed(spark, dir.getAbsolutePath, gelf = false)
+      .writeStream.format("memory").queryName(name)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    assert(q.awaitTermination(60000))
+    spark.table(name)
+  }
+
   test("TCP ingest: per-connection bytes land in files the syslog pipeline parses") {
     val dir = freshDir("tcp")
     val ing = new sources.SocketIngest.TcpIngest(0, dir.getAbsolutePath)
@@ -43,8 +52,7 @@ class SocketIngestSpec extends SparkSpec {
     // no partial files ever visible
     assert(dir.listFiles().forall(f => !f.getName.startsWith(".")))
     assert(dir.listFiles().count(_.getName.endsWith(".dat")) === 2) // one per connection
-    val parsed = streaming.SyslogPipeline.parseLines(
-        spark.read.text(dir.getAbsolutePath + "/*.dat"))
+    val parsed = ingested(dir, "ingest_tcp")
       .select("hostname", "severity", "prio").orderBy("hostname")
       .collect()
       .map(r => (r.getString(0), r.get(1).toString.toInt, r.get(2).toString.toInt))
@@ -78,8 +86,7 @@ class SocketIngestSpec extends SparkSpec {
       s.close()
     } finally ing.stop()
     assert(dir.listFiles().forall(f => !f.getName.startsWith(".")))
-    val parsed = streaming.SyslogPipeline.parseLines(
-        spark.read.text(dir.getAbsolutePath + "/*.dat"))
+    val parsed = ingested(dir, "ingest_tls")
       .select("hostname", "message").orderBy("hostname").collect()
       .map(r => (r.getString(0), r.getString(1)))
     assert(parsed.map(_._1).toSeq === Seq("sec-host-1", "sec-host-2"))

@@ -24,25 +24,6 @@ class StreamingSpec extends SparkSpec {
   private def spoolTable(dir: java.nio.file.Path) =
     spark.read.format("graft-spool").load(dir.toString)
 
-  test("file stream -> parse -> watermark window -> memory sink") {
-    val in = Files.createTempDirectory("graft_stream_in")
-    writeLines(in, "conn1.log", Seq(
-      "<165>1 2024-01-05T10:00:10Z web01 app start",
-      "<165>1 2024-01-05T10:00:40Z web01 app mid",
-      "<165>1 2024-01-05T10:01:10Z web01 app next",
-      "<34>1 2024-01-05T10:00:20Z db01 oom"))
-    val q = SyslogPipeline.countsQuery(
-      SyslogPipeline.parsedStream(spark, in.toString), "win_counts")
-    q.awaitTermination(60000)
-    val rows = spark.table("win_counts")
-      .orderBy("window_start_s", "hostname").collect()
-    // 10:00 window: web01 ×2, db01 ×1; 10:01 window: web01 ×1
-    assert(rows.length === 3)
-    assert(rows(0).getString(1) === "db01" && rows(0).getLong(2) === 1)
-    assert(rows(1).getString(1) === "web01" && rows(1).getLong(2) === 2)
-    assert(rows(2).getString(1) === "web01" && rows(2).getLong(2) === 1)
-  }
-
   test("spool sink writes gzip records that round-trip to the record JSON") {
     val in = Files.createTempDirectory("graft_spool_in")
     val spool = Files.createTempDirectory("graft_spool_out")
@@ -51,7 +32,7 @@ class StreamingSpec extends SparkSpec {
       "<165>1 2024-01-05T10:00:10Z web01 app one",
       "<165>1 2024-01-05T10:00:20Z web01 app two"))
     val q = SyslogPipeline.spoolDirQuery(
-      SyslogPipeline.parsedStream(spark, in.toString),
+      SyslogPipeline.parsed(spark, in.toString, gelf = false),
       spool.toString, ckpt.toString)
     q.awaitTermination(60000)
     val files = spoolFiles(spool)
@@ -76,12 +57,12 @@ class StreamingSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft_ckpt_ck")
     writeLines(in, "c1.log", Seq("<165>1 2024-01-05T10:00:10Z web01 app one"))
     val q1 = SyslogPipeline.spoolDirQuery(
-      SyslogPipeline.parsedStream(spark, in.toString), spool.toString, ckpt.toString)
+      SyslogPipeline.parsed(spark, in.toString, gelf = false), spool.toString, ckpt.toString)
     q1.awaitTermination(60000)
     // second run with the same checkpoint only sees the NEW file
     writeLines(in, "c2.log", Seq("<165>1 2024-01-05T10:00:20Z web02 app two"))
     val q2 = SyslogPipeline.spoolDirQuery(
-      SyslogPipeline.parsedStream(spark, in.toString), spool.toString, ckpt.toString)
+      SyslogPipeline.parsed(spark, in.toString, gelf = false), spool.toString, ckpt.toString)
     q2.awaitTermination(60000)
     assert(spoolFiles(spool).length === 2)
     val hosts = spoolTable(spool).select("log_stream").collect()
@@ -101,7 +82,7 @@ class StreamingSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft_cfg_ck")
     writeLines(in, "c.log", Seq("<165>1 2024-01-05T10:00:10Z web01 app x"))
     val q = SyslogPipeline.spoolDirQuery(
-      SyslogPipeline.parsedStream(spark, in.toString),
+      SyslogPipeline.parsed(spark, in.toString, gelf = false),
       spool.toString, ckpt.toString,
       config = graft.RelayConfig(groupPrefix = "/prod"), port = 514)
     q.awaitTermination(60000)
@@ -196,7 +177,7 @@ class StreamingSpec extends SparkSpec {
       """{"version":"1.1","host":"app01","short_message":"frac ts","timestamp":1704412800.5,"level":6}""",
       "not json at all"))
     val q = SyslogPipeline.spoolDirQuery(
-      SyslogPipeline.parsedGelfStream(spark, in.toString),
+      SyslogPipeline.parsed(spark, in.toString, gelf = true),
       spool.toString, ckpt.toString,
       config = RelayConfig(gelf = true), port = 12201)
     q.awaitTermination(60000)
@@ -299,7 +280,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("chunked gelf stream end-to-end: datagrams spanning micro-batches reach the spool") {
-    import spark.implicits._
     val in = Files.createTempDirectory("graft_chunk_in")
     val spool = Files.createTempDirectory("graft_chunk_out")
     val ckpt = Files.createTempDirectory("graft_chunk_ck")
@@ -311,21 +291,21 @@ class StreamingSpec extends SparkSpec {
     }
     val msg = """{"version":"1.1","host":"chunky","short_message":"split msg","timestamp":1704412800,"level":6}"""
     val (half1, half2) = msg.splitAt(msg.length / 2)
-    def feed(rows: Seq[(Array[Byte], Long)]): Unit =
-      rows.toDF("datagram", "ts")
-        .selectExpr("datagram", "timestamp_seconds(ts) AS event_time")
-        .coalesce(1).write.mode("append").parquet(in.toString)
-    // file 1: first half of msg 7; file 2 (written after): second half
-    // — maxFilesPerTrigger=1 forces them into separate micro-batches
-    feed(Seq(dgram(7, 0, 2, half1) -> 100L))
-    Thread.sleep(1100) // distinct mod times => deterministic file order
-    feed(Seq(dgram(7, 1, 2, half2) -> 101L))
-    val q = SyslogPipeline.spoolDirQuery(
-      SyslogPipeline.parsedChunkedGelfStream(spark, in.toString,
-        maxFilesPerTrigger = 1),
+    // one UDP ingest file per datagram, in the listener's format
+    def feed(name: String, d: Array[Byte]): Unit =
+      Files.write(in.resolve(name), s"${d.length} ".getBytes("US-ASCII") ++ d)
+    def drain(): Unit = assert(SyslogPipeline.spoolDirQuery(
+      SyslogPipeline.parsed(spark, in.toString, gelf = true, udp = true),
       spool.toString, ckpt.toString,
-      config = RelayConfig(gelf = true), port = 12201)
-    q.awaitTermination(60000)
+      config = RelayConfig(gelf = true), port = 12201).awaitTermination(60000))
+    // file 1: first half of msg 7; file 2: second half — two
+    // AvailableNow runs on one checkpoint put them in separate
+    // micro-batches, so the half from run 1 waits in reassembly state
+    feed("udp-0-00000.dat", dgram(7, 0, 2, half1))
+    drain()
+    assert(spoolFiles(spool).isEmpty)
+    feed("udp-0-00001.dat", dgram(7, 1, 2, half2))
+    drain()
     val chunky = spoolTable(spool).filter(col("log_stream") === "chunky")
       .select("message", "timestamp").collect()
     assert(chunky.length === 1)
