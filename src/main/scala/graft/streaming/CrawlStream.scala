@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.StructType
   * arrival gets ONE verdict with the batch stage order's precedence:
   *
   *   - `dup_url`   — canonical form already claimed (stage 1: the
-  *                   first-claim owner protocol of #172, state = one
+  *                   [[Admission.claimFirst]] protocol of #172, state = one
   *                   long per distinct canonical URL ever seen);
   *   - `blocked_domain` / `banned_word` / `bad_extension` — the #162
   *                   battery on the canonical form (stage 2,
@@ -64,22 +64,14 @@ object CrawlStream {
       .as[UrlArrival]
   }
 
-  /** First writer owns each canonical URL (within a micro-batch the
-    * smallest doc_id, deterministic); state is ONE long per distinct
-    * canonical URL — the #172 protocol with the crawl columns riding
-    * through. */
+  /** [[Admission.claimFirst]] over canonical-URL keys; state is ONE
+    * long per distinct canonical URL — the #172 protocol with the
+    * crawl columns riding through. */
   def observations(arr: Dataset[UrlArrival]): Dataset[UrlObs] = {
     import arr.sparkSession.implicits._
-    arr.groupByKey(a => (a.k1, a.k2))
-      .flatMapGroupsWithState[Long, UrlObs](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) { (_, as, state) =>
-        val sorted = as.toArray.sortBy(_.doc_id)
-        val owner = if (state.exists) state.get else sorted.head.doc_id
-        if (!state.exists) state.update(owner)
-        sorted.iterator.map(a =>
-          UrlObs(a.doc_id, a.canon_url, a.host, a.domain, owner))
-      }
+    Admission.claimFirst(arr)(a => (a.k1, a.k2), _.doc_id, _.doc_id) {
+      (a, owner) => UrlObs(a.doc_id, a.canon_url, a.host, a.domain, owner)
+    }
   }
 
   /** The crawl history's bloom bit-set at the #196 SIZED geometry
@@ -242,22 +234,19 @@ object CrawlStream {
   def admissionQuery(spark: SparkSession, inputDir: String,
                      schema: StructType, hb: HistoryBloom,
                      checkpointDir: String, outDir: String): StreamingQuery =
-    observations(arrivals(
-      spark.readStream.schema(schema).parquet(inputDir)))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[UrlObs], batchId: Long) =>
-        // pinned: the action re-executes the micro-batch plan
-        // including the stateful operator (the r18 soak finding on
-        // the media twin — 2×-work, not correctness)
-        graft.Checkpoints.pin(verdicts(batch, hb))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
+    Admission.appendLog(observations(arrivals(
+      spark.readStream.schema(schema).parquet(inputDir))),
+      checkpointDir, outDir)(verdicts(_, hb))
+
+  /** The admission verdict-log schema — written by [[admissionQuery]],
+    * read by the chained [[scheduleQuery]] and [[quotaQuery]] (and
+    * re-emitted verbatim by the latter, so either log feeds the
+    * scheduler unchanged). */
+  private[graft] val verdictSchema: StructType = new StructType()
+    .add("doc_id", "long").add("canon_url", "string")
+    .add("host", "string").add("domain", "string")
+    .add("verdict", "string").add("dup_of", "long")
+    .add("batch_id", "long")
 
   /** #202 — the per-cycle SCHEDULER, chained to [[admissionQuery]]
     * through storage (the materialized-handoff pattern): each
@@ -274,16 +263,6 @@ object CrawlStream {
     * quota would be wrong, which is why this is a per-batch pure
     * stage and not keyed state). Output: the cycle's rank-ordered
     * fetch list, cycle-stamped. */
-  /** The admission verdict-log schema — written by [[admissionQuery]],
-    * read by the chained [[scheduleQuery]] and [[quotaQuery]] (and
-    * re-emitted verbatim by the latter, so either log feeds the
-    * scheduler unchanged). */
-  private[graft] val verdictSchema: StructType = new StructType()
-    .add("doc_id", "long").add("canon_url", "string")
-    .add("host", "string").add("domain", "string")
-    .add("verdict", "string").add("dup_of", "long")
-    .add("batch_id", "long")
-
   def scheduleQuery(spark: SparkSession, verdictDir: String,
                     ranks: DataFrame, checkpointDir: String,
                     outDir: String): StreamingQuery = {

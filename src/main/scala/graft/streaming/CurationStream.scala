@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.{Classifier, Corpus, Dedup}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming composed-curation admission (SURVEY §2 #155) — the
@@ -29,11 +29,10 @@ import org.apache.spark.sql.types.StructType
   * row (kind 0, key = the doc's 128-bit xxhash64-pair over the
   * normalized text) plus `Bands` LSH band rows (kind = band+1, key =
   * the band hash from [[MinhashStream]]'s shared signature algebra),
-  * and a single flatMapGroupsWithState keyed by (kind, k1, k2)
-  * assigns every bucket a first-writer owner — the same
-  * claim-and-verify protocol as #82, with exact rows auto-verified
-  * (a fingerprint collision IS the duplicate). State is one owner
-  * (+ 32-slot signature on band buckets) per claimed bucket: bounded
+  * and one [[Admission.claimFirst]] keyed by (kind, k1, k2) assigns
+  * every bucket a first-writer owner — #82's verify, with exact rows
+  * auto-verified (a fingerprint collision IS the duplicate). State is
+  * one owner (+ 32-slot signature on band buckets) per claimed bucket: bounded
   * by distinct documents seen — the union of #49's and #82's bounds,
   * never stream length times bands. At 100 TB the horizon is the
   * knob, exactly as #82 documents: swap NoTimeout for an ingest-time
@@ -130,36 +129,19 @@ object CurationStream {
     exact.unionByName(bands).as[GateRow]
   }
 
-  /** First writer claims each bucket; everyone reports the owner and
-    * their verification strength against it (within a micro-batch
-    * the smallest doc_id claims, deterministic like #82). */
+  /** [[Admission.claimFirst]] over (kind, k1, k2) buckets: everyone
+    * reports the owner and their verification strength against it —
+    * signature agreement on band rows, the full seed count on exact
+    * rows (their empty signature is the claim snapshot). */
   def observations(rows: Dataset[GateRow]): Dataset[GateObs] = {
     import rows.sparkSession.implicits._
-    rows
-      .groupByKey(r => (r.kind, r.k1, r.k2))
-      .flatMapGroupsWithState[MinhashStream.BucketOwner, GateObs](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) { (_, rs, state) =>
-        val sorted = rs.toArray.sortBy(_.doc_id)
-        val st =
-          if (state.exists) state.get
-          else MinhashStream.BucketOwner(sorted.head.doc_id, sorted.head.sig)
-        if (!state.exists) state.update(st)
-        sorted.iterator.map { r =>
-          val m =
-            if (r.kind == 0) Dedup.MinhashSeeds
-            else {
-              var agree = 0
-              var i = 0
-              while (i < r.sig.length) {
-                if (r.sig(i) == st.sig(i)) agree += 1
-                i += 1
-              }
-              agree
-            }
-          GateObs(r.doc_id, r.kind, st.owner, m, r.contaminated)
-        }
-      }
+    Admission.claimFirst(rows)(r => (r.kind, r.k1, r.k2), _.doc_id,
+      r => Admission.BucketOwner(r.doc_id, r.sig)) { (r, st) =>
+      val m =
+        if (r.kind == 0) Dedup.MinhashSeeds
+        else Admission.agreement(r.sig, st.sig)
+      GateObs(r.doc_id, r.kind, st.owner, m, r.contaminated)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -183,21 +165,14 @@ object CurationStream {
       .as[UrlDoc]
   }
 
-  /** First writer owns each canonical URL (within a micro-batch the
-    * smallest doc_id, deterministic like the content gates); state is
-    * ONE long per distinct canonical URL ever seen — the frontier's
+  /** [[Admission.claimFirst]] over canonical-URL keys; state is ONE
+    * long per distinct canonical URL ever seen — the frontier's
     * seen-set, the smallest state any gate here carries. */
   def urlObservations(docs: Dataset[UrlDoc]): Dataset[UrlVerdict] = {
     import docs.sparkSession.implicits._
-    docs.groupByKey(d => (d.k1, d.k2))
-      .flatMapGroupsWithState[Long, UrlVerdict](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) { (_, ds, state) =>
-        val sorted = ds.toArray.sortBy(_.doc_id)
-        val owner = if (state.exists) state.get else sorted.head.doc_id
-        if (!state.exists) state.update(owner)
-        sorted.iterator.map(d => UrlVerdict(d.doc_id, d.text, d.source, owner))
-      }
+    Admission.claimFirst(docs)(d => (d.k1, d.k2), _.doc_id, _.doc_id) {
+      (d, owner) => UrlVerdict(d.doc_id, d.text, d.source, owner)
+    }
   }
 
   /** The URL admission stage as its own query, CHAINED to
@@ -314,30 +289,23 @@ object CurationStream {
   def admissionQuery(spark: SparkSession, inputDir: String, schema: StructType,
                      checkpointDir: String, outDir: String,
                      bloomBits: Array[Boolean]): StreamingQuery =
-    observations(gateRows(
-      spark.readStream.schema(schema).parquet(inputDir), bloomBits))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[GateObs], batchId: Long) =>
-        batch.toDF()
-          .groupBy("doc_id")
-          .agg(
-            min(when(col("kind") === 0 && col("owner") =!= col("doc_id"),
-              col("owner"))).as("dup_exact"),
-            min(when(col("kind") > 0 && col("owner") =!= col("doc_id") &&
-              col("matches") * 2 >= Dedup.MinhashSeeds,
-              col("owner"))).as("dup_near"),
-            max(col("contaminated").cast("int")).as("cont"))
-          .select(col("doc_id"),
-            when(col("dup_exact").isNotNull, "dup_exact")
-              .when(col("dup_near").isNotNull, "near_dup")
-              .when(col("cont") === 1, "contaminated")
-              .otherwise("admitted").as("verdict"),
-            coalesce(col("dup_exact"), col("dup_near")).as("dup_of"),
-            lit(batchId).as("batch_id"))
-          .write.mode("append").parquet(outDir)
-      }
-      .start()
+    Admission.appendLog(observations(gateRows(
+      spark.readStream.schema(schema).parquet(inputDir), bloomBits)),
+      checkpointDir, outDir) { batch =>
+      batch.toDF()
+        .groupBy("doc_id")
+        .agg(
+          min(when(col("kind") === 0 && col("owner") =!= col("doc_id"),
+            col("owner"))).as("dup_exact"),
+          min(when(col("kind") > 0 && col("owner") =!= col("doc_id") &&
+            col("matches") * 2 >= Dedup.MinhashSeeds,
+            col("owner"))).as("dup_near"),
+          max(col("contaminated").cast("int")).as("cont"))
+        .select(col("doc_id"),
+          when(col("dup_exact").isNotNull, "dup_exact")
+            .when(col("dup_near").isNotNull, "near_dup")
+            .when(col("cont") === 1, "contaminated")
+            .otherwise("admitted").as("verdict"),
+          coalesce(col("dup_exact"), col("dup_near")).as("dup_of"))
+    }
 }

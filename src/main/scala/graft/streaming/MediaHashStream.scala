@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.MediaHash.{Bands, HamMax}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** Streaming perceptual-hash media dedup at ingest (SURVEY §2 #188) —
@@ -21,12 +21,13 @@ import org.apache.spark.sql.types.StructType
   * ([[graft.operators.MediaHash.ahashInRowSql]]) remains spec-pinned
   * equal on every corpus asset as the SQL-expression cross-check.
   *
-  * Keyed state is one owner per claimed (band, band_val) bucket — its
-  * doc id PLUS its full 4-band hash (the #82 claim-and-verify
-  * protocol: a band collision is only a CANDIDATE; the verify is
-  * exact Hamming ≤ [[HamMax]] against the owner's full hash, the
-  * batch confirm rule — without it, 16-bit band collisions would
-  * falsely reject unique assets at stream scale). State is ≤ Bands
+  * Admission is the [[Admission.claimFirst]] protocol over (band,
+  * band_val) buckets. Keyed state is one owner per claimed bucket —
+  * its doc id PLUS its full 4-band hash (a band collision is only a
+  * CANDIDATE; the verify is exact Hamming ≤ [[HamMax]] against the
+  * owner's full hash, the batch confirm rule — without it, 16-bit
+  * band collisions would falsely reject unique assets at stream
+  * scale). State is ≤ Bands
   * rows per distinct asset admitted; the 100 TB horizon knob is the
   * same as #82's (swap NoTimeout for an ingest-time timeout past the
   * dedup window).
@@ -35,7 +36,6 @@ object MediaHashStream {
 
   case class BandRow(doc_id: Long, band: Int, band_val: Long,
                      hash: Array[Long])
-  case class BucketOwner(owner: Long, hash: Array[Long])
   /** One row per (incoming asset, band): the bucket's owner and the
     * full-hash Hamming distance to it. */
   case class BandObs(doc_id: Long, band: Int, owner: Long, hamming: Int)
@@ -64,36 +64,29 @@ object MediaHashStream {
       }
   }
 
-  private def hamming(a: Array[Long], b: Array[Long]): Int = {
-    var d = 0
-    var i = 0
-    while (i < a.length) {
-      d += java.lang.Long.bitCount(a(i) ^ b(i)); i += 1
-    }
-    d
-  }
-
-  /** First writer claims each bucket (with its full hash); everyone
-    * reports the owner and their Hamming distance to it. Within a
-    * micro-batch the smallest doc_id claims (deterministic regardless
-    * of arrival order inside the batch). */
+  /** [[Admission.claimFirst]] over (band, band_val) buckets: the
+    * claim snapshots the full hash, and every asset reports the owner
+    * and its full-hash Hamming distance to it. */
   def bandObservations(assets: DataFrame): Dataset[BandObs] = {
     import assets.sparkSession.implicits._
-    bandRows(assets)
-      .groupByKey(r => (r.band, r.band_val))
-      .flatMapGroupsWithState[BucketOwner, BandObs](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) { (_, rows, state) =>
-        val sorted = rows.toArray.sortBy(_.doc_id)
-        val st =
-          if (state.exists) state.get
-          else BucketOwner(sorted.head.doc_id, sorted.head.hash)
-        if (!state.exists) state.update(st)
-        sorted.iterator.map { r =>
-          BandObs(r.doc_id, r.band, st.owner, hamming(r.hash, st.hash))
-        }
-      }
+    Admission.claimFirst(bandRows(assets))(r => (r.band, r.band_val),
+      _.doc_id, r => Admission.BucketOwner(r.doc_id, r.hash)) { (r, st) =>
+      BandObs(r.doc_id, r.band, st.owner,
+        Admission.hamming(r.hash, st.sig, 0, r.hash.length))
+    }
   }
+
+  /** The per-batch verdict collapse: band observations → one row per
+    * asset (dup_of = smallest confirmed colliding owner, admitted
+    * flag). Shared by [[dedupQuery]] and the soak harness so the
+    * long-horizon run exercises the production collapse verbatim. */
+  def verdicts(batch: Dataset[BandObs]): DataFrame =
+    batch.toDF()
+      .groupBy("doc_id")
+      .agg(min(when(col("owner") =!= col("doc_id") &&
+          col("hamming") <= HamMax, col("owner")))
+        .as("dup_of"))
+      .withColumn("admitted", col("dup_of").isNull.cast("int"))
 
   /** File-based ingest: per-band observations collapse to one verdict
     * row per asset — `dup_of` = smallest colliding owner within the
@@ -116,30 +109,9 @@ object MediaHashStream {
     * drift is inherent to causal first-writer admission — storing only
     * admitted owners instead would let the SECOND near-twin of a
     * rejected asset through the gate. */
-  /** The per-batch verdict collapse: band observations → one row per
-    * asset (dup_of = smallest confirmed colliding owner, admitted
-    * flag). Shared by [[dedupQuery]] and the soak harness so the
-    * long-horizon run exercises the production collapse verbatim. */
-  def verdicts(batch: Dataset[BandObs]): DataFrame =
-    batch.toDF()
-      .groupBy("doc_id")
-      .agg(min(when(col("owner") =!= col("doc_id") &&
-          col("hamming") <= HamMax, col("owner")))
-        .as("dup_of"))
-      .withColumn("admitted", col("dup_of").isNull.cast("int"))
-
   def dedupQuery(spark: SparkSession, inputDir: String, schema: StructType,
                  checkpointDir: String, outDir: String): StreamingQuery =
-    bandObservations(
-      spark.readStream.schema(schema).parquet(inputDir))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[BandObs], batchId: Long) =>
-        verdicts(batch)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outDir)
-      }
-      .start()
+    Admission.appendLog(bandObservations(
+      spark.readStream.schema(schema).parquet(inputDir)),
+      checkpointDir, outDir)(verdicts)
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.{MediaHash, MediaPipeline}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** Streaming composed media-curation admission (SURVEY §2 #193) — the
@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.StructType
   * FIRST (an asset rejected as a duplicate never pays decode or the
   * histogram), gates after, exactly #190's stage order.
   *
-  * The dedup gate is #188's claim-and-verify protocol over BOTH
+  * The dedup gate is #188's [[Admission.claimFirst]] protocol over BOTH
   * perceptual folds (round 20, the #190 stage-1 union's streaming
   * twin): each arrival hashes with the shared [[MediaHash.ahashBands]]
   * AND [[MediaHash.ghashBands]] JVM folds and claims 8 buckets —
@@ -54,27 +54,17 @@ object MediaPipelineStream {
   case class AssetObs(doc_id: Long, band: Int, owner: Long, hamming: Int,
                       content: Array[Byte])
 
-  /** Per-modality Hamming over the CONCATENATED 8-word hash (words
-    * 0–3 aHash, 4–7 gHash): a band's collision is confirmed against
-    * its OWN fold's distance — summing across modalities would mix
-    * radii and reject nothing either detector confirms. */
-  private def modalityHamming(a: Array[Long], b: Array[Long],
-                              band: Int): Int = {
-    val off = if (band < MediaHash.Bands) 0 else MediaHash.Bands
-    var d = 0
-    var i = off
-    while (i < off + MediaHash.Bands) {
-      d += java.lang.Long.bitCount(a(i) ^ b(i)); i += 1
-    }
-    d
-  }
-
-  /** The #188 first-writer bucket protocol over BOTH folds (8 buckets
-    * per asset — the batch union's admission twin) with the payload
-    * riding along; state stores owner + the 8-word hash only. */
+  /** The #188 first-writer bucket protocol ([[Admission.claimFirst]])
+    * over BOTH folds (8 buckets per asset — the batch union's
+    * admission twin) with the payload riding along; state stores
+    * owner + the 8-word hash only. The verify is per-modality Hamming
+    * over the CONCATENATED hash (words 0–3 aHash, 4–7 gHash): a band's
+    * collision is confirmed against its OWN fold's distance — summing
+    * across modalities would mix radii and reject nothing either
+    * detector confirms. */
   def observations(assets: DataFrame): Dataset[AssetObs] = {
     import assets.sparkSession.implicits._
-    assets
+    val rows = assets
       .select(col("doc_id"), col("content").cast("binary").as("content"))
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
@@ -86,29 +76,15 @@ object MediaPipelineStream {
           }
         }
       }
-      .groupByKey(r => (r.band, r.band_val))
-      .flatMapGroupsWithState[MediaHashStream.BucketOwner, AssetObs](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) { (key, rows, state) =>
-        val sorted = rows.toArray.sortBy(_.doc_id)
-        val st =
-          if (state.exists) state.get
-          else MediaHashStream.BucketOwner(sorted.head.doc_id, sorted.head.hash)
-        if (!state.exists) state.update(st)
-        sorted.iterator.map { r =>
-          AssetObs(r.doc_id, r.band, st.owner,
-            modalityHamming(r.hash, st.hash, key._1), r.content)
-        }
-      }
+    Admission.claimFirst(rows)(r => (r.band, r.band_val), _.doc_id,
+      r => Admission.BucketOwner(r.doc_id, r.hash)) { (r, st) =>
+      val off = if (r.band < MediaHash.Bands) 0 else MediaHash.Bands
+      AssetObs(r.doc_id, r.band, st.owner,
+        Admission.hamming(r.hash, st.sig, off, off + MediaHash.Bands),
+        r.content)
+    }
   }
 
-  /** File-based composed admission: per-band observations collapse to
-    * one row per asset, duplicates verdict first (batch stage order),
-    * survivors run the single-sourced gate battery; one verdict row
-    * per asset — (doc_id, verdict, dup_of, width, height, out_w,
-    * out_h, top_bin, top_share_permille, batch_id) appended to
-    * `outDir`, the admission record (gate columns are null on dups —
-    * a rejected duplicate never pays decode). */
   /** The per-batch verdict collapse: observations → one verdict row
     * per asset, duplicates first (never paying decode), survivors
     * through the single-sourced gate battery. Shared by
@@ -148,19 +124,17 @@ object MediaPipelineStream {
     dups.unionByName(gated)
   }
 
+  /** File-based composed admission: per-band observations collapse to
+    * one row per asset, duplicates verdict first (batch stage order),
+    * survivors run the single-sourced gate battery; one verdict row
+    * per asset — (doc_id, verdict, dup_of, width, height, out_w,
+    * out_h, top_bin, top_share_permille, batch_id) appended to
+    * `outDir`, the admission record (gate columns are null on dups —
+    * a rejected duplicate never pays decode). */
   def admissionQuery(spark: SparkSession, inputDir: String,
                      schema: StructType, checkpointDir: String,
                      outDir: String): StreamingQuery =
-    observations(
-      spark.readStream.schema(schema).parquet(inputDir))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[AssetObs], batchId: Long) =>
-        verdicts(batch)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outDir)
-      }
-      .start()
+    Admission.appendLog(observations(
+      spark.readStream.schema(schema).parquet(inputDir)),
+      checkpointDir, outDir)(verdicts)
 }

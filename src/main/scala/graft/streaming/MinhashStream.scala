@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.Dedup.{Bands, MinhashSeeds}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** Streaming MinHash-LSH near-dup admission (SURVEY §2 #82) — the
@@ -19,10 +19,12 @@ import org.apache.spark.sql.types.StructType
   * doc hashes to the same (band, band_hash) buckets in both engines
   * (spec-asserted: every batch-detected pair collides in the stream).
   *
-  * Keyed state is one owner per CLAIMED LSH bucket — its doc-id PLUS
-  * its 32-long signature (≈264 bytes/bucket, ≤ `Bands` buckets per
-  * distinct document seen), hash-partitioned by bucket exactly like
-  * the batch band join's shuffle. The signature rides along because a
+  * Admission is the [[Admission.claimFirst]] protocol over (band,
+  * band_hash) buckets. Keyed state is one owner per CLAIMED LSH
+  * bucket — its doc-id PLUS its 32-long signature (≈264
+  * bytes/bucket, ≤ `Bands` buckets per distinct document seen),
+  * hash-partitioned by bucket exactly like the batch band join's
+  * shuffle. The signature rides along because a
   * band collision is only a CANDIDATE: the batch job verifies every
   * candidate pair with the signature-agreement filter
   * (matches·2 ≥ seeds, est J ≥ 0.5 — Dedup.scala), and without the
@@ -39,7 +41,6 @@ object MinhashStream {
 
   case class BandRow(doc_id: Long, band: Int, band_hash: Long,
                      sig: Array[Long])
-  case class BucketOwner(owner: Long, sig: Array[Long])
   /** One row per (incoming doc, band): which doc owns the bucket this
     * band landed in (owner == doc_id means this doc claimed it) and
     * how many signature slots agree with that owner. */
@@ -81,58 +82,36 @@ object MinhashStream {
       .as[BandRow]
   }
 
-  /** First writer claims each bucket (with its signature); everyone
-    * reports the owner and their signature agreement with it. Within
-    * a micro-batch the smallest doc_id claims (deterministic
-    * regardless of arrival order inside the batch). */
+  /** [[Admission.claimFirst]] over (band, band_hash) buckets: the
+    * claim snapshots the signature, and every doc reports the owner
+    * and its signature agreement with it. */
   def bandObservations(docs: DataFrame): Dataset[BandObs] = {
     import docs.sparkSession.implicits._
-    bandRows(docs)
-      .groupByKey(r => (r.band, r.band_hash))
-      .flatMapGroupsWithState[BucketOwner, BandObs](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) { (_, rows, state) =>
-        val sorted = rows.toArray.sortBy(_.doc_id)
-        val st =
-          if (state.exists) state.get
-          else BucketOwner(sorted.head.doc_id, sorted.head.sig)
-        if (!state.exists) state.update(st)
-        sorted.iterator.map { r =>
-          var m = 0
-          var i = 0
-          while (i < r.sig.length) {
-            if (r.sig(i) == st.sig(i)) m += 1
-            i += 1
-          }
-          BandObs(r.doc_id, r.band, st.owner, m)
-        }
-      }
+    Admission.claimFirst(bandRows(docs))(r => (r.band, r.band_hash),
+      _.doc_id, r => Admission.BucketOwner(r.doc_id, r.sig)) { (r, st) =>
+      BandObs(r.doc_id, r.band, st.owner, Admission.agreement(r.sig, st.sig))
+    }
   }
 
-  /** File-based ingest: per-band observations collapse to one verdict
-    * row per doc in foreachBatch — `dup_of` = smallest colliding
-    * owner whose signature agreement passes the batch job's verify
-    * threshold (matches·2 ≥ seeds, est J ≥ 0.5; an unverified band
-    * collision is a candidate, not a duplicate), null means the doc
-    * is ADMITTED (batch_id stamps the increment; the parquet log is
-    * the admission record). */
+  /** The per-batch verdict collapse: band observations → one row per
+    * doc — `dup_of` = smallest colliding owner whose signature
+    * agreement passes the batch job's verify threshold (matches·2 ≥
+    * seeds, est J ≥ 0.5; an unverified band collision is a candidate,
+    * not a duplicate), null means the doc is ADMITTED. */
+  def verdicts(batch: Dataset[BandObs]): DataFrame =
+    batch.toDF()
+      .groupBy("doc_id")
+      .agg(min(when(col("owner") =!= col("doc_id") &&
+          col("matches") * 2 >= MinhashSeeds, col("owner")))
+        .as("dup_of"))
+      .withColumn("admitted", col("dup_of").isNull.cast("int"))
+
+  /** File-based ingest: each increment's [[verdicts]] append to
+    * `outDir` through [[Admission.appendLog]] (batch_id stamps the
+    * increment; the parquet log is the admission record). */
   def dedupQuery(spark: SparkSession, inputDir: String, schema: StructType,
                  checkpointDir: String, outDir: String): StreamingQuery =
-    bandObservations(
-      spark.readStream.schema(schema).parquet(inputDir))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[BandObs], batchId: Long) =>
-        batch.toDF()
-          .groupBy("doc_id")
-          .agg(min(when(col("owner") =!= col("doc_id") &&
-              col("matches") * 2 >= MinhashSeeds, col("owner")))
-            .as("dup_of"))
-          .withColumn("admitted", col("dup_of").isNull.cast("int"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outDir)
-      }
-      .start()
+    Admission.appendLog(bandObservations(
+      spark.readStream.schema(schema).parquet(inputDir)),
+      checkpointDir, outDir)(verdicts)
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.Similarity
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming SemDeDup admission (SURVEY §2 #149) — the streaming twin
@@ -135,19 +135,8 @@ object SemanticStream {
     * (the admission record, like #82's). */
   def admissionQuery(spark: SparkSession, inputDir: String,
                      schema: StructType, checkpointDir: String,
-                     outDir: String, refDir: String): StreamingQuery = {
-    val cents = frozenCentroids(spark, refDir)
-    admissions(
-      spark.readStream.schema(schema).parquet(inputDir), cents)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Verdict], batchId: Long) =>
-        batch.toDF()
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outDir)
-      }
-      .start()
-  }
+                     outDir: String, refDir: String): StreamingQuery =
+    Admission.appendLog(admissions(
+      spark.readStream.schema(schema).parquet(inputDir),
+      frozenCentroids(spark, refDir)), checkpointDir, outDir)(_.toDF())
 }

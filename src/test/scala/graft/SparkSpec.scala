@@ -20,6 +20,11 @@ object SparkSpec {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // every unpartitioned window documents the invariant that bounds
+    // its frame, so WindowExec's single-partition warning is noise here
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
     s
   }
 }
