@@ -1,13 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
-import org.apache.spark.sql.functions.lit
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.functions.{call_function, element_at, lit}
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 /** The first-writer claim protocol every streaming admission gate
   * shares — the reference relay's admit-each-message-once rule
   * carried over to documents, assets and URLs — and the verdict-log
-  * query shell around it.
+  * shell ([[batchLog]]) every single-output streaming query records
+  * through.
   *
   * The protocol ([[claimFirst]]): rows are grouped by bucket key in
   * one keyed-state operator (Append, NoTimeout). A bucket with no
@@ -78,22 +80,83 @@ object Admission {
     d
   }
 
-  /** The verdict-log shell: drains everything available (AvailableNow)
-    * and appends each micro-batch's `collapse`, stamped with its
-    * `batch_id`, to the parquet log at `outDir` — the admission
-    * record. At-least-once: a crash between the append and the commit
-    * log replays the batch and appends its verdict rows twice (the
-    * `foreachBatch` contract). */
-  def appendLog[T](rows: Dataset[T], checkpointDir: String, outDir: String)(
-      collapse: Dataset[T] => DataFrame): StreamingQuery =
+  /** Bit `idx` (0-based, long) of a packed ARRAY<BIGINT> bit-set
+    * column: the lookup both stateless bloom probes (curation
+    * decontamination, crawl seen-set) run per row. The words ship as a
+    * one-row broadcast frame, never a plan literal, so the bit-set is
+    * not serialized into every micro-batch's task binary. */
+  private[streaming] def bitAt(words: Column, idx: Column): Column =
+    call_function("shiftright",
+      element_at(words, call_function("shiftright", idx, lit(6)).cast("int") + lit(1)),
+      (idx % 64L).cast("int")).bitwiseAND(lit(1L)) === lit(1L)
+
+  /** The verdict-log shell every single-output `foreachBatch` query in
+    * graft.streaming writes through: admission gates, frozen-model
+    * scorers and the streaming sketches. It drains everything
+    * available (AvailableNow) in the caller's output `mode` and
+    * records each micro-batch's `collapse`, stamped with a bigint
+    * `batch_id` data column, as flat parquet files directly under
+    * `outDir` — the query's record, read back with
+    * `spark.read.parquet(outDir)`.
+    *
+    * Exactly-once: `foreachBatch` is at-least-once (a crash between
+    * the write and the commit log replays the batch with the same
+    * id), so batch k is staged in the hidden `outDir/_batch-<k>/`
+    * (skipped by parquet readers and file-stream sources), any
+    * `outDir/batch-<k>-*` files a previous attempt left are deleted,
+    * and the staged parts are renamed to `outDir/batch-<k>-<part>`.
+    * A replayed batch therefore replaces its own files instead of
+    * adding a second copy; part names drop the write's job UUID, so a
+    * chained file-stream reader that already consumed batch k sees the
+    * same paths again and skips them. Flat files from earlier
+    * append-only runs resume in place.
+    *
+    * Fails fast at query start when `outDir` holds `batch_id=*` or
+    * `batch=*` directories (the former by-batch layout): flat files
+    * next to partition directories are silently dropped on read.
+    *
+    * Queries that stay on their own `foreachBatch`: the URL and
+    * classifier curation stages (`urlAdmissionQuery`,
+    * `clfAdmissionQuery`) write two outputs per batch; the crawl
+    * scheduler stamps `cycle_id`; the crawl quota gates' rows carry
+    * their upstream `batch_id`, which a second stamp would overwrite;
+    * `CorpusStream` rides the built-in file sink; the spool drain's
+    * ship and spool queries are relay paths. */
+  def batchLog[T](rows: Dataset[T], checkpointDir: String, outDir: String,
+                  mode: OutputMode)(
+      collapse: Dataset[T] => DataFrame): StreamingQuery = {
+    val out = new Path(outDir)
+    val fs = out.getFileSystem(rows.sparkSession.sparkContext.hadoopConfiguration)
+    require(!fs.exists(out) || !fs.listStatus(out).exists(s => s.isDirectory &&
+        Seq("batch_id=", "batch=").exists(s.getPath.getName.startsWith)),
+      s"$outDir holds batch_id=/batch= directories from the by-batch " +
+        "layout, and flat files written next to them are dropped on read; " +
+        "migrate it once by writing spark.read.parquet(outDir) with " +
+        "batch_id (or a gap-quantile log's batch) cast to a bigint " +
+        "batch_id column as flat parquet to a new outDir")
     rows.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .outputMode("append")
+      .outputMode(mode)
       .foreachBatch { (batch: Dataset[T], batchId: Long) =>
+        val staged = new Path(out, s"_batch-$batchId")
         collapse(batch)
           .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outDir)
+          .write.mode("overwrite").parquet(staged.toString)
+        fs.globStatus(new Path(out, s"batch-$batchId-*"))
+          .foreach(s => fs.delete(s.getPath, false))
+        fs.listStatus(staged).map(_.getPath)
+          .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+          .foreach { p =>
+            val part = p.getName.replaceFirst(
+              "-[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "")
+            val dst = new Path(out, s"batch-$batchId-$part")
+            if (!fs.rename(p, dst))
+              throw new java.io.IOException(s"batch log: rename $p -> $dst failed")
+          }
+        fs.delete(staged, true)
+        ()
       }
       .start()
+  }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.{AnnIndex, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming ANN serving against the PERSISTED index (SURVEY §2
@@ -30,8 +30,6 @@ import org.apache.spark.sql.types.StructType
   * Scale: serving is STATELESS (no streaming state at all — the
   * index IS the state, on disk, maintained by #173's append); per
   * batch the driver collects only the model-sized probed-cid set.
-  * foreachBatch writes `outDir/batch_id=<id>/` (overwrite-by-batch
-  * exactly-once, the #140 layout).
   */
 object AnnStream {
 
@@ -51,20 +49,14 @@ object AnnStream {
   }
 
   /** File-based serving: parquet drops of query vectors in `inputDir`
-    * are answered into `outDir/batch_id=<id>/`; the index is ensured
-    * once at query start. */
+    * are answered into `outDir` through [[Admission.batchLog]]; the
+    * index is ensured once at query start. */
   def serveQuery(spark: SparkSession, inputDir: String, schema: StructType,
                  dir: String, outDir: String,
                  checkpointDir: String): StreamingQuery = {
     val indexDir = AnnIndex.ensureIvfPq(spark, dir)
-    spark.readStream.schema(schema).parquet(inputDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scoreBatch(spark, batch, dir, indexDir)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-      }
-      .start()
+    Admission.batchLog(spark.readStream.schema(schema).parquet(inputDir),
+      checkpointDir, outDir, OutputMode.Append())(
+      scoreBatch(spark, _, dir, indexDir))
   }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.{Crawl, Url}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming crawl-frontier admission (#200) — the streaming twin of
@@ -195,11 +195,7 @@ object CrawlStream {
     val hv = graft.functions.SketchFunctions.poly_hash(col("canon_url"))
     forall(sequence(lit(0L), lit((BloomK - 1).toLong)), j => {
       val pos = ((hv * (j * 2L + 3L) + (j * 13L + 5L)) % p) % lit(mBits)
-      val idx = j * mBits + pos
-      val word = element_at(col("bloom_words"),
-        call_function("shiftright", idx, lit(6)).cast("int") + lit(1))
-      call_function("shiftright", word, (idx % 64L).cast("int"))
-        .bitwiseAND(lit(1L)) === lit(1L)
+      Admission.bitAt(col("bloom_words"), j * mBits + pos)
     })
   }
 
@@ -234,9 +230,9 @@ object CrawlStream {
   def admissionQuery(spark: SparkSession, inputDir: String,
                      schema: StructType, hb: HistoryBloom,
                      checkpointDir: String, outDir: String): StreamingQuery =
-    Admission.appendLog(observations(arrivals(
+    Admission.batchLog(observations(arrivals(
       spark.readStream.schema(schema).parquet(inputDir))),
-      checkpointDir, outDir)(verdicts(_, hb))
+      checkpointDir, outDir, OutputMode.Append())(verdicts(_, hb))
 
   /** The admission verdict-log schema — written by [[admissionQuery]],
     * read by the chained [[scheduleQuery]] and [[quotaQuery]] (and

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import graft.operators.{Classifier, Corpus, Dedup}
+import graft.operators.{Corpus, Dedup}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming composed-curation admission (SURVEY §2 #155) — the
@@ -41,10 +41,12 @@ import org.apache.spark.sql.types.StructType
   *
   * Decontamination is STATELESS here: the eval split's bloom bitset
   * (K·M bits — 24 KiB at the #84 geometry, FIXED regardless of
-  * eval-set size) is collected once at stream construction and rides
-  * the plan as a single array literal, probed per row with
-  * exists/forall over the shared poly-hash positions — the frozen-
-  * artifact pattern of #140's LM and #149's centroids. Admission is
+  * eval-set size) is collected once at stream construction, packed
+  * into 3,072 longs and shipped as a one-row broadcast frame (a plan
+  * literal of 196,608 booleans would ride every micro-batch's task
+  * binary), probed per row with exists/forall over the shared
+  * poly-hash positions — the frozen-artifact pattern of #140's LM and
+  * #149's centroids. Admission is
   * causal (first arrival wins a bucket) where the batch keep-best
   * picks the LONGEST twin; exact twins share their normalized text,
   * hence identical signatures and grams, so every downstream gate is
@@ -89,16 +91,17 @@ object CurationStream {
   }
 
   /** Stateless contamination probe over a `grams` array column: any
-    * gram whose K positions are ALL lit in `bits` flags the doc —
-    * the identical affine row-hash family over the shared poly gram
-    * hash that #84 and the batch pipeline broadcast-join against. */
-  private def contaminatedCol(grams: Column, bits: Column): Column =
+    * gram whose K positions are ALL lit in the packed `bloom_words`
+    * column flags the doc — the identical affine row-hash family over
+    * the shared poly gram hash that #84 and the batch pipeline
+    * broadcast-join against. */
+  private def contaminatedCol(grams: Column): Column =
     exists(
       transform(grams, g => graft.functions.SketchFunctions.poly_hash(g)),
       hv => forall(sequence(lit(0L), lit((Corpus.BloomK - 1).toLong)), j => {
         val p = lit(graft.functions.SketchFunctions.PolyP)
         val pos = ((hv * (j * 2L + 3L) + (j * 13L + 5L)) % p) % Corpus.BloomM
-        element_at(bits, (j * Corpus.BloomM + pos + 1L).cast("int"))
+        Admission.bitAt(col("bloom_words"), j * Corpus.BloomM + pos)
       }))
 
   /** Quality gate → per-doc gate rows (1 exact + `Bands` band rows).
@@ -112,15 +115,21 @@ object CurationStream {
   def gateRows(docs: DataFrame, bloomBits: Array[Boolean]): Dataset[GateRow] = {
     import docs.sparkSession.implicits._
     val tf = graft.functions.TextFunctions
+    val words = new Array[Long]((bloomBits.length + 63) >> 6)
+    bloomBits.indices.foreach { i =>
+      if (bloomBits(i)) words(i >> 6) |= 1L << (i & 63)
+    }
     val base = Corpus.qualityGate(
       docs.select(col("doc_id"), tf.normText(col("text")).as("norm")))
       .withColumn("toks", array_distinct(tf.word_ngrams(col("norm"), 2)))
       .filter(size(col("toks")) > 0)
-    val exact = base.select(col("doc_id"), lit(0).as("kind"),
-      xxhash64(col("norm")).as("k1"), xxhash64(lit("fp2"), col("norm")).as("k2"),
-      array().cast("array<bigint>").as("sig"),
-      contaminatedCol(Corpus.ngrams(col("norm"), Corpus.DecontamN),
-        typedLit(bloomBits)).as("contaminated"))
+    val exact = base
+      .crossJoin(broadcast(Seq(Tuple1(words)).toDF("bloom_words")))
+      .select(col("doc_id"), lit(0).as("kind"),
+        xxhash64(col("norm")).as("k1"), xxhash64(lit("fp2"), col("norm")).as("k2"),
+        array().cast("array<bigint>").as("sig"),
+        contaminatedCol(Corpus.ngrams(col("norm"), Corpus.DecontamN))
+          .as("contaminated"))
     val bands = MinhashStream.explodeBands(
       MinhashStream.withSignature(base.select("doc_id", "toks")))
       .select(col("doc_id"), (col("band") + 1).cast("int").as("kind"),
@@ -235,19 +244,15 @@ object CurationStream {
     * them) and re-running the quality gate downstream in
     * [[admissionQuery]] is a no-op on the survivors.
     *
-    * Scoring is STATELESS (frozen weights pinned once, two scalar
-    * constants + the one-class degenerate pass-through flag collected
-    * at query start); the only streaming state is source progress —
-    * so the stage adds NO stateful operator to the chain. */
+    * Scoring is STATELESS (the model comes from
+    * [[ClassifierStream.frozenModel]] once at query start, one-class
+    * pass-through flag included); the only streaming state is source
+    * progress — so the stage adds NO stateful operator to the chain. */
   def clfAdmissionQuery(spark: SparkSession, inputDir: String,
                         schema: StructType, modelDir: String,
                         checkpointDir: String, verdictDir: String,
                         admittedDir: String): StreamingQuery = {
-    val w = graft.Checkpoints.pin(
-      Classifier.model(spark, modelDir).select("tok", "w_fp"))
-    val cst = Classifier.constants(spark, modelDir).head()
-    val (ddFp, pdFp) = (cst.getLong(0), cst.getLong(1))
-    val degenerate = cst.getLong(2) == 0L || cst.getLong(3) == 0L
+    val m = ClassifierStream.frozenModel(spark, modelDir)
     spark.readStream.schema(schema).parquet(inputDir)
       .writeStream
       .option("checkpointLocation", checkpointDir)
@@ -261,9 +266,9 @@ object CurationStream {
         val qualified = graft.Checkpoints.pin(Corpus.qualityGate(
           batch.withColumn("norm", tf.normText(col("text")))).drop("norm"))
         val scored = graft.Checkpoints.pin(
-          ClassifierStream.scoreBatch(qualified, w, ddFp, pdFp)
+          ClassifierStream.scoreBatch(qualified, m)
             .withColumn("keep",
-              (lit(degenerate) || col("score_fp") > 0).cast("int")))
+              (lit(m.oneClass) || col("score_fp") > 0).cast("int")))
         scored.select(col("doc_id"),
           when(col("keep") === 1, "clf_admitted")
             .otherwise("clf_reject").as("verdict"),
@@ -289,9 +294,9 @@ object CurationStream {
   def admissionQuery(spark: SparkSession, inputDir: String, schema: StructType,
                      checkpointDir: String, outDir: String,
                      bloomBits: Array[Boolean]): StreamingQuery =
-    Admission.appendLog(observations(gateRows(
+    Admission.batchLog(observations(gateRows(
       spark.readStream.schema(schema).parquet(inputDir), bloomBits)),
-      checkpointDir, outDir) { batch =>
+      checkpointDir, outDir, OutputMode.Append()) { batch =>
       batch.toDF()
         .groupBy("doc_id")
         .agg(

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.Sketch
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming twin of the log-bucket gap-quantile sketch (SURVEY §2
@@ -70,20 +70,12 @@ object GapQuantileStream {
   }
 
   /** File-based ingest: each parquet drop in `inputDir` is a feed
-    * increment. Each micro-batch's bucket increments land in their own
-    * `batch=<id>` subdirectory with overwrite — a replayed batch after
-    * a crash rewrites the SAME directory, so the at-least-once
-    * foreachBatch contract can never double-count an increment. */
+    * increment; each micro-batch's bucket increments are recorded
+    * through [[Admission.batchLog]] (Update mode), which keeps a
+    * replayed batch from double-counting an increment. */
   def gapQuery(spark: SparkSession, inputDir: String, schema: StructType,
                checkpointDir: String, outDir: String): StreamingQuery =
-    bucketIncrements(spark.readStream.schema(schema).parquet(inputDir))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("update")
-      .foreachBatch { (batch: Dataset[BucketInc], batchId: Long) =>
-        batch.toDF()
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
+    Admission.batchLog(
+      bucketIncrements(spark.readStream.schema(schema).parquet(inputDir)),
+      checkpointDir, outDir, OutputMode.Update())(_.toDF())
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.MediaHash.{Bands, HamMax}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming perceptual-hash media dedup at ingest (SURVEY §2 #188) —
@@ -111,7 +111,7 @@ object MediaHashStream {
     * rejected asset through the gate. */
   def dedupQuery(spark: SparkSession, inputDir: String, schema: StructType,
                  checkpointDir: String, outDir: String): StreamingQuery =
-    Admission.appendLog(bandObservations(
+    Admission.batchLog(bandObservations(
       spark.readStream.schema(schema).parquet(inputDir)),
-      checkpointDir, outDir)(verdicts)
+      checkpointDir, outDir, OutputMode.Append())(verdicts)
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.{MediaHash, MediaPipeline}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming composed media-curation admission (SURVEY §2 #193) — the
@@ -134,7 +134,7 @@ object MediaPipelineStream {
   def admissionQuery(spark: SparkSession, inputDir: String,
                      schema: StructType, checkpointDir: String,
                      outDir: String): StreamingQuery =
-    Admission.appendLog(observations(
+    Admission.batchLog(observations(
       spark.readStream.schema(schema).parquet(inputDir)),
-      checkpointDir, outDir)(verdicts)
+      checkpointDir, outDir, OutputMode.Append())(verdicts)
 }

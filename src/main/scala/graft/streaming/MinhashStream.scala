@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.Dedup.{Bands, MinhashSeeds}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming MinHash-LSH near-dup admission (SURVEY §2 #82) — the
@@ -107,11 +107,11 @@ object MinhashStream {
       .withColumn("admitted", col("dup_of").isNull.cast("int"))
 
   /** File-based ingest: each increment's [[verdicts]] append to
-    * `outDir` through [[Admission.appendLog]] (batch_id stamps the
+    * `outDir` through [[Admission.batchLog]] (batch_id stamps the
     * increment; the parquet log is the admission record). */
   def dedupQuery(spark: SparkSession, inputDir: String, schema: StructType,
                  checkpointDir: String, outDir: String): StreamingQuery =
-    Admission.appendLog(bandObservations(
+    Admission.batchLog(bandObservations(
       spark.readStream.schema(schema).parquet(inputDir)),
-      checkpointDir, outDir)(verdicts)
+      checkpointDir, outDir, OutputMode.Append())(verdicts)
 }

@@ -136,7 +136,8 @@ object SemanticStream {
   def admissionQuery(spark: SparkSession, inputDir: String,
                      schema: StructType, checkpointDir: String,
                      outDir: String, refDir: String): StreamingQuery =
-    Admission.appendLog(admissions(
+    Admission.batchLog(admissions(
       spark.readStream.schema(schema).parquet(inputDir),
-      frozenCentroids(spark, refDir)), checkpointDir, outDir)(_.toDF())
+      frozenCentroids(spark, refDir)),
+      checkpointDir, outDir, OutputMode.Append())(_.toDF())
 }

@@ -4,7 +4,7 @@ import graft.functions.SketchFunctions
 import graft.functions.TextFunctions.normText
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming twin of the KMV distinct sketch (SURVEY §2 #66): a
@@ -57,24 +57,13 @@ object SketchStream {
   }
 
   /** File-based ingest: each parquet drop in `inputDir` is a feed
-    * increment; refreshed per-source estimates append to `outDir`
-    * stamped with their micro-batch id (foreachBatch, because the
-    * memory sink cannot recover from a checkpoint and the parquet
-    * sink cannot write update mode — the stamped append IS the
-    * update log, latest batch_id per key wins). */
+    * increment; refreshed per-source estimates are recorded through
+    * [[Admission.batchLog]] in Update mode (the parquet sink cannot
+    * write it): the latest batch_id per key wins. */
   def sketchQuery(spark: SparkSession, inputDir: String, schema: StructType,
                   k: Int, checkpointDir: String,
                   outDir: String): StreamingQuery =
-    sketchUpdates(
-      spark.readStream.schema(schema).parquet(inputDir), k)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("update")
-      .foreachBatch { (batch: Dataset[SketchUpdate], batchId: Long) =>
-        batch.toDF()
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outDir)
-      }
-      .start()
+    Admission.batchLog(
+      sketchUpdates(spark.readStream.schema(schema).parquet(inputDir), k),
+      checkpointDir, outDir, OutputMode.Update())(_.toDF())
 }

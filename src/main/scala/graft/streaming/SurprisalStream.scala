@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming unigram-LM admission scoring against a FROZEN model —
@@ -56,44 +56,15 @@ object SurprisalStream {
 
   /** File-based admission scorer: train the frozen model on
     * `modelDir`'s documents table once at query start, then score
-    * each parquet drop in `inputDir` and write the per-doc scores
-    * under `outDir`.
-    *
-    * Exactly-once output: `foreachBatch` is at-least-once — a
-    * micro-batch retried after a partial failure re-runs the write —
-    * so each batch OVERWRITES its own batchId-derived subdirectory
-    * (`outDir/batch_id=<id>/`). A replay of batch k rewrites
-    * `batch_id=k` in place instead of appending duplicate score rows,
-    * restoring the idempotence the built-in file sink provides
-    * (round-11 advisory). Readers `spark.read.parquet(outDir)` as
-    * before — batch_id surfaces as a partition column.
-    *
-    * BREAKING (r12, flagged in the r12 advisory): before the
-    * batch_id layout, scores appended as FLAT parquet files directly
-    * under `outDir`. A pre-existing flat `outDir` mixed with
-    * partition directories breaks parquet partition discovery, so
-    * this fails fast on such a directory instead of writing a layout
-    * readers can no longer load — migrate by moving old flat files
-    * into a `batch_id=-1/` subdirectory (they become batch -1). */
+    * each parquet drop in `inputDir` and record the per-doc scores
+    * under `outDir` through [[Admission.batchLog]]. */
   def scoreQuery(spark: SparkSession, inputDir: String, schema: StructType,
                  modelDir: String, outDir: String,
                  checkpointDir: String): StreamingQuery = {
-    val flat = new java.io.File(outDir).listFiles()
-    require(flat == null || !flat.exists(f =>
-        f.isFile && f.getName.endsWith(".parquet")),
-      s"$outDir holds flat parquet files from the pre-batch_id layout; " +
-        "move them into a batch_id=-1/ subdirectory (partition " +
-        "discovery cannot mix flat files with batch_id= directories)")
     val vocab = graft.functions.TextFunctions.unigramVocab(spark, modelDir)
     val nTotal = vocab.agg(sum(col("c"))).head.getLong(0)
-    spark.readStream.schema(schema).parquet(inputDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scoreBatch(batch, vocab, nTotal)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-      }
-      .start()
+    Admission.batchLog(spark.readStream.schema(schema).parquet(inputDir),
+      checkpointDir, outDir, OutputMode.Append())(
+      scoreBatch(_, vocab, nTotal))
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming fertility-gated admission against a FROZEN unigram
@@ -35,9 +35,7 @@ import org.apache.spark.sql.types.StructType
   * Scale: scoring is STATELESS (the only streaming state is source
   * progress) — per batch: a batch-local word-type collapse (the #127
   * move, so the DP runs once per type per batch, not per occurrence),
-  * the broadcast model map, one per-doc aggregate. foreachBatch with
-  * the batchId-overwrite layout for exactly-once output (the
-  * SurprisalStream pattern).
+  * the broadcast model map, one per-doc aggregate.
   */
 object UnigramStream {
 
@@ -91,9 +89,8 @@ object UnigramStream {
 
   /** File-based admission scorer: freeze the piece model on
     * `modelDir`'s documents once at query start, then score each
-    * parquet drop in `inputDir` into `outDir/batch_id=<id>/`
-    * (overwrite-by-batch = exactly-once, the SurprisalStream
-    * layout). */
+    * parquet drop in `inputDir` into `outDir` through
+    * [[Admission.batchLog]]. */
   def admitQuery(spark: SparkSession, inputDir: String, schema: StructType,
                  modelDir: String, outDir: String,
                  checkpointDir: String): StreamingQuery = {
@@ -102,14 +99,7 @@ object UnigramStream {
     // inventory aggregation inside every micro-batch's crossJoin
     val pm = graft.Checkpoints.pin(
       graft.operators.Unigram.pieceMapFrame(spark, modelDir))
-    spark.readStream.schema(schema).parquet(inputDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scoreBatch(batch, pm)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-      }
-      .start()
+    Admission.batchLog(spark.readStream.schema(schema).parquet(inputDir),
+      checkpointDir, outDir, OutputMode.Append())(scoreBatch(_, pm))
   }
 }

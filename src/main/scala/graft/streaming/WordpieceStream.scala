@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming fertility-gated admission against a FROZEN WordPiece
@@ -40,8 +40,6 @@ import org.apache.spark.sql.types.StructType
   * move, so the fold runs once per type per batch, not per
   * occurrence), the broadcast inventory literal (model-sized: ≤
   * alphabet + TrainRounds symbols), one per-doc aggregate.
-  * foreachBatch with the batchId-overwrite layout for exactly-once
-  * output (the SurprisalStream pattern).
   */
 object WordpieceStream {
 
@@ -99,20 +97,12 @@ object WordpieceStream {
     * `modelDir`'s documents once at query start (driver-collected —
     * model-sized by the vocabulary cap, the typedlit broadcast every
     * batch plan reuses), then score each parquet drop in `inputDir`
-    * into `outDir/batch_id=<id>/` (overwrite-by-batch = exactly-once,
-    * the SurprisalStream layout). */
+    * into `outDir` through [[Admission.batchLog]]. */
   def admitQuery(spark: SparkSession, inputDir: String, schema: StructType,
                  modelDir: String, outDir: String,
                  checkpointDir: String): StreamingQuery = {
     val (inv, maxL) = graft.operators.Wordpiece.frozenInventory(spark, modelDir)
-    spark.readStream.schema(schema).parquet(inputDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scoreBatch(batch, inv, maxL)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-      }
-      .start()
+    Admission.batchLog(spark.readStream.schema(schema).parquet(inputDir),
+      checkpointDir, outDir, OutputMode.Append())(scoreBatch(_, inv, maxL))
   }
 }

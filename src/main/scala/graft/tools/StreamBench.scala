@@ -249,14 +249,11 @@ object StreamBench {
       val pool = graft.Tables.load(spark, sfDir, "documents")
         .select("text", "source").limit(500)
         .as[(String, String)].collect()
-      val w = graft.Checkpoints.pin(
-        graft.operators.Classifier.model(spark, sfDir).select("tok", "w_fp"))
-      val cst = graft.operators.Classifier.constants(spark, sfDir).head()
-      val (ddFp, pdFp) = (cst.getLong(0), cst.getLong(1))
+      val m = graft.streaming.ClassifierStream.frozenModel(spark, sfDir)
       val input = MemoryStream[(Long, String, String)]
       val q = input.toDS().toDF("doc_id", "text", "source").writeStream
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          graft.streaming.ClassifierStream.scoreBatch(b, w, ddFp, pdFp)
+          graft.streaming.ClassifierStream.scoreBatch(b, m)
             .write.format("noop").mode("overwrite").save()
         }
         .start()
