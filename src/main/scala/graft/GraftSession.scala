@@ -16,6 +16,16 @@ import org.apache.spark.sql.SparkSession
   *   session-global flag — see Tables.events) so no operator needs to
   *   mutate config mid-session.
   * - UTC so timestamp→string formatting matches the DuckDB oracle.
+  * - `spark.sql.artifact.isolation.enabled` off: every streaming query
+  *   start clones the session, and with isolation on each clone gets
+  *   its own executor class loader. Spark's codegen cache is keyed on
+  *   (class loader, source), so every AvailableNow pass of the relay
+  *   recompiled its generated classes and the JIT warmed them again
+  *   from scratch (45 compilations per relay_burst burst). With it
+  *   off the clones share one loader and a pass reuses the classes the
+  *   first one compiled. graft adds no session artifacts (jars, files,
+  *   archives), so isolation bought nothing. Spark reads the flag only
+  *   when a session is created, hence here and not at run time.
   */
 object GraftSession {
   def builder(cpus: String): SparkSession.Builder =
@@ -29,6 +39,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.artifact.isolation.enabled", "false")
 
   def create(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",

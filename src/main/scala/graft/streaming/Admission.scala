@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
-import org.apache.spark.sql.functions.{call_function, element_at, lit}
+import org.apache.spark.sql.functions.{call_function, element_at, lit, udf}
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 /** The first-writer claim protocol every streaming admission gate
@@ -90,6 +90,14 @@ object Admission {
       element_at(words, call_function("shiftright", idx, lit(6)).cast("int") + lit(1)),
       (idx % 64L).cast("int")).bitwiseAND(lit(1L)) === lit(1L)
 
+  /** `value` as a non-null bigint column that reaches the plan through
+    * a closure, not a literal: Spark inlines a primitive literal into
+    * the generated source, and its codegen cache is keyed on that
+    * source, so stamping a micro-batch id with `lit` compiled the
+    * stage again on every batch. Through the closure the source is the
+    * same on every batch and the compiled class is reused. */
+  private[streaming] def batchValue(value: Long): Column = udf(() => value).apply()
+
   /** The verdict-log shell every single-output `foreachBatch` query in
     * graft.streaming writes through: admission gates, frozen-model
     * scorers and the streaming sketches. It drains everything
@@ -141,7 +149,7 @@ object Admission {
       .foreachBatch { (batch: Dataset[T], batchId: Long) =>
         val staged = new Path(out, s"_batch-$batchId")
         collapse(batch)
-          .withColumn("batch_id", lit(batchId))
+          .withColumn("batch_id", batchValue(batchId))
           .write.mode("overwrite").parquet(staged.toString)
         fs.globStatus(new Path(out, s"batch-$batchId-*"))
           .foreach(s => fs.delete(s.getPath, false))

@@ -274,7 +274,7 @@ object CrawlStream {
         val (_, s5) = graft.operators.Crawl.scheduleFrom(kept, ranks)
         s5.select(col("doc_id"), col("canon_url"), col("host"),
             col("rank_fp"), col("host_pos"))
-          .withColumn("cycle_id", lit(cycleId))
+          .withColumn("cycle_id", Admission.batchValue(cycleId))
           .write.mode("append").parquet(outDir)
         ()
       }

@@ -218,7 +218,7 @@ object CurationStream {
           when(col("owner") =!= col("doc_id"), "url_dup")
             .otherwise("url_admitted").as("verdict"),
           when(col("owner") =!= col("doc_id"), col("owner")).as("dup_of"),
-          lit(batchId).as("batch_id"))
+          Admission.batchValue(batchId).as("batch_id"))
           .write.mode("append").parquet(verdictDir)
         df.filter(col("owner") === col("doc_id"))
           .select("doc_id", "text", "source")
@@ -272,7 +272,7 @@ object CurationStream {
         scored.select(col("doc_id"),
           when(col("keep") === 1, "clf_admitted")
             .otherwise("clf_reject").as("verdict"),
-          col("score_fp"), lit(batchId).as("batch_id"))
+          col("score_fp"), Admission.batchValue(batchId).as("batch_id"))
           .write.mode("append").parquet(verdictDir)
         qualified.join(scored.filter(col("keep") === 1).select("doc_id"),
           Seq("doc_id"), "left_semi")

@@ -29,7 +29,10 @@ object GelfChunkStream {
                    event_time: java.sql.Timestamp)
   case class ChunkState(parts: Map[Int, Array[Byte]], total: Int,
                         first_ms: Long)
-  case class Assembled(id: Long, message: String, n_chunks: Int)
+  /** A completed message; `received` is its first chunk's
+    * `event_time`, the receipt time parse falls back to. */
+  case class Assembled(id: Long, message: String, n_chunks: Int,
+                       received: java.sql.Timestamp)
 
   /** GELF chunk-reassembly window (protocol.py:292 / GELF spec). */
   val ReassemblySeconds = 5L
@@ -69,7 +72,8 @@ object GelfChunkStream {
         Option(out)
           .filterNot(b => (b eq raw) &&
             graft.functions.BinaryFunctions.looksCompressed(raw))
-          .map(b => Assembled(id, new String(b, "UTF-8"), st.total))
+          .map(b => Assembled(id, new String(b, "UTF-8"), st.total,
+            new java.sql.Timestamp(st.first_ms)))
           .iterator
       } else {
         state.update(st)

@@ -117,7 +117,7 @@ object SpoolDrainStream {
             .agg(count(lit(1)).as("n_records"),
               sum("part_bytes").as("batch_bytes"),
               sum(when(!col("ok"), 1L).otherwise(0L)).as("n_failed"))
-            .withColumn("micro_batch", lit(batchId))
+            .withColumn("micro_batch", Admission.batchValue(batchId))
             .write.mode("append").parquet(outDir)
           // re-spool failures for the next drain generation; only
           // failed NAMES cross to the driver

@@ -70,7 +70,19 @@ object SyslogPipeline {
     * peer in the file name (`-src-<addr>-`), which here replaces the
     * parsed hostname as the message source (→ logStream, sink.py:163)
     * via a map-side path extract. An untagged file (v2 LOCAL, or a
-    * UDP file) falls back to the parsed hostname. */
+    * UDP file) falls back to the parsed hostname.
+    *
+    * Receive time: every line carries its ingest file's
+    * `modificationTime` (the listener's last write to it) as
+    * `received`, and parse uses it where the reference uses the
+    * message's receipt time — the RFC 3164 year inference and the
+    * fallback for a missing or unparseable timestamp. A reassembled
+    * GELF chunk message carries its first chunk's file time. The time
+    * comes from the data, not from the micro-batch clock, so re-reading
+    * the same file yields the same timestamps and record ids, and the
+    * generated code holds no per-batch literal (a `current_timestamp()`
+    * is inlined into the code as a constant, which made every relay
+    * pass compile its parse stage again). */
   def parsed(spark: SparkSession, ingestDir: String, gelf: Boolean,
              udp: Boolean = false, proxy: Boolean = false): DataFrame = {
     val content = col("content")
@@ -85,12 +97,14 @@ object SyslogPipeline {
           col("modificationTime").as("event_time"), col("path"))
     val lines =
       if (gelf && udp) gelfDatagrams(frames)
-      else frames.select(col("datagram").cast("string").as("value"), col("path"))
+      else frames.select(col("datagram").cast("string").as("value"), col("path"),
+        col("event_time").as("received"))
     // [^/]+ keeps the capture in the basename: a work dir whose PATH
     // contains "-src-" must never fabricate a tag
     val tag = regexp_extract(col("path"), "-src-([^/]+)-\\d{5}\\.dat$", 1)
     val source = Option.when(proxy)(when(tag =!= "", translate(tag, "_", ":")))
-    if (gelf) parseGelfLines(lines, source) else parseLines(lines, source)
+    if (gelf) parseGelfLines(lines, col("received"), source)
+    else parseLines(lines, col("received"), source)
   }
 
   /** GELF datagrams → one JSON document each: chunks reassembled,
@@ -101,9 +115,10 @@ object SyslogPipeline {
     val isChunk = gelf_chunk_parse(col("datagram")).isNotNull
     val whole = frames.filter(!isChunk)
       .select(decompress_auto(col("datagram")).cast("string").as("value"),
-        col("path"))
+        col("path"), col("event_time").as("received"))
     val assembled = GelfChunkStream.assembleDatagrams(frames.filter(isChunk))
-      .toDF().select(col("message").as("value"), lit(null).cast("string").as("path"))
+      .toDF().select(col("message").as("value"), lit(null).cast("string").as("path"),
+        col("received"))
     whole.unionAll(assembled)
   }
 
@@ -112,8 +127,12 @@ object SyslogPipeline {
     * non-null, REPLACES the parsed hostname as the message source —
     * the PROXY-protocol path (reference proxy.py rewrites peername so
     * the sink's logStream carries the advertised client, sink.py:163);
-    * null/absent falls back to the parsed hostname. */
-  def parseLines(lines: DataFrame,
+    * null/absent falls back to the parsed hostname. `received`: the
+    * receipt time (a timestamp Column evaluated against `lines`) that
+    * infers an RFC 3164 stamp's year and, at whole-second precision,
+    * replaces a missing or unparseable timestamp; [[parsed]] passes
+    * the ingest file's time. */
+  def parseLines(lines: DataFrame, received: org.apache.spark.sql.Column,
                  sourceOverride: Option[org.apache.spark.sql.Column] = None): DataFrame =
     lines
       .withColumn("h", parseHeader(col("value")))
@@ -121,7 +140,7 @@ object SyslogPipeline {
       .withColumn("ts_ms",
         when(col("h.version") === 1, ts5424Millis(col("h.ts_raw")))
           .when(col("h.version") === 0,
-            ts3164(col("h.ts_raw"), unix_timestamp(current_timestamp()))
+            ts3164(col("h.ts_raw"), unix_timestamp(received))
               .getField("parsed_s") * 1000))
       .select(
         col("value").as("message"),
@@ -131,13 +150,12 @@ object SyslogPipeline {
         coalesce((sourceOverride.toSeq :+ col("h.hostname") :+
           lit("unknown")): _*).as("hostname"),
         col("h.content").as("content"),
-        coalesce(col("ts_ms"),
-          (unix_timestamp(current_timestamp()) * 1000)).as("ts_ms"))
+        coalesce(col("ts_ms"), unix_timestamp(received) * 1000).as("ts_ms"))
       .withColumn("event_time", timestamp_millis(col("ts_ms")))
 
   /** Shared with tests (works on both streaming and batch frames).
-    * `sourceOverride` as in [[parseLines]]. */
-  def parseGelfLines(lines: DataFrame,
+    * `sourceOverride` and `received` as in [[parseLines]]. */
+  def parseGelfLines(lines: DataFrame, received: org.apache.spark.sql.Column,
                      sourceOverride: Option[org.apache.spark.sql.Column] = None): DataFrame =
     lines
       .withColumn("j", org.apache.spark.sql.functions.from_json(
@@ -148,7 +166,7 @@ object SyslogPipeline {
           lit("unknown")): _*).as("hostname"),
         col("j.short_message").as("content"),
         coalesce(round(col("j.timestamp") * 1000).cast("long"),
-          unix_timestamp(current_timestamp()) * 1000).as("ts_ms"))
+          unix_timestamp(received) * 1000).as("ts_ms"))
       .withColumn("event_time", timestamp_millis(col("ts_ms")))
 
   /** Spool sink: the parsed stream written as REAL spool files

@@ -6,6 +6,7 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import scala.collection.mutable
 
 import graft.{GraftSession, SparkEntry}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{ExplainMode, SparkPlanInfo}
@@ -26,9 +27,9 @@ import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdat
   *
   * It prints one line per layer per pass (wall, jobs, stages, tasks,
   * task run and CPU time, GC, shuffle read/write, spill, peak task
-  * memory), the fastest pass's top stages by task time, and one
-  * plan-hazard line counted on the plan the `noop` write actually ran
-  * (post-AQE). With `planOutDir` it also writes each query's formatted
+  * memory, codegen compilations), the fastest pass's top stages by
+  * task time, and one plan-hazard line counted on the plan the `noop`
+  * write actually ran (post-AQE). With `planOutDir` it also writes each query's formatted
   * plan to `<planOutDir>/<query>.txt`.
   *
   *   sbt "runMain graft.tools.Profile <q1,q2,...> [sfDir] [passes] [planOutDir]"
@@ -65,10 +66,14 @@ object Profile {
 
   /** One layer of one pass: sums over its tasks, plus max-over-task
     * peaks (a cap that stopped holding shows up as a task whose peak
-    * memory or shuffle volume grows with the corpus squared). */
+    * memory or shuffle volume grows with the corpus squared).
+    * `compiles` counts the codegen compilations (Janino cache misses)
+    * the JVM made while the layer ran: a repeat pass of an unchanged
+    * query should make none, so a non-zero count there is compile
+    * churn. */
   final class Stats {
     var wallS = 0.0
-    var jobs, stages, tasks, runMs, cpuNs, gcMs = 0L
+    var jobs, stages, tasks, runMs, cpuNs, gcMs, compiles = 0L
     var shuffleRead, shuffleWrite, spill = 0L
     var peakMem, maxTaskShuffleRead, maxTaskShuffleWrite = 0L
     /** Planner phase name → ms (plan layer only). */
@@ -76,7 +81,7 @@ object Profile {
 
     def add(o: Stats): Stats = {
       wallS += o.wallS; jobs += o.jobs; stages += o.stages; tasks += o.tasks
-      runMs += o.runMs; cpuNs += o.cpuNs; gcMs += o.gcMs
+      runMs += o.runMs; cpuNs += o.cpuNs; gcMs += o.gcMs; compiles += o.compiles
       shuffleRead += o.shuffleRead; shuffleWrite += o.shuffleWrite; spill += o.spill
       peakMem = math.max(peakMem, o.peakMem)
       maxTaskShuffleRead = math.max(maxTaskShuffleRead, o.maxTaskShuffleRead)
@@ -89,7 +94,7 @@ object Profile {
       f"$wallS%7.3f s  jobs $jobs%3d  stages $stages%3d  tasks $tasks%4d  " +
         f"task ${runMs / 1e3}%7.3f s  cpu ${cpuNs / 1e9}%7.3f s  gc ${gcMs / 1e3}%6.3f s  " +
         s"shuffle r/w ${mib(shuffleRead)}/${mib(shuffleWrite)} MiB  " +
-        s"spill ${mib(spill)} MiB  peak task mem ${mib(peakMem)} MiB" +
+        s"spill ${mib(spill)} MiB  peak task mem ${mib(peakMem)} MiB  compiles $compiles" +
         phases.map { case (k, v) => s"  $k $v ms" }.mkString
     }
   }
@@ -163,17 +168,24 @@ object Profile {
       case _ => ()
     }
 
-    /** Runs `body` with its jobs tagged `tag` and adds its wall time to
-      * that tag's stats. */
+    /** Runs `body` with its jobs tagged `tag` and adds its wall time
+      * and codegen compilations to that tag's stats. The compilation
+      * count is JVM-wide, so it also holds whatever else compiled
+      * meanwhile. */
     def layer[T](spark: SparkSession, tag: String)(body: => T): T = {
       val sc = spark.sparkContext
       val prev = sc.getLocalProperty(TagKey)
       sc.setLocalProperty(TagKey, tag)
       val t0 = System.nanoTime()
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       try body
       finally {
         sc.setLocalProperty(TagKey, prev)
-        synchronized(stats(tag).wallS += (System.nanoTime() - t0) / 1e9)
+        synchronized {
+          val s = stats(tag)
+          s.wallS += (System.nanoTime() - t0) / 1e9
+          s.compiles += CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+        }
       }
     }
 

@@ -554,7 +554,8 @@ object StreamBench {
         .option("maxFilesPerTrigger", 16).parquet(gelfIn.getAbsolutePath)
       val q = graft.streaming.SyslogPipeline.parseGelfLines(
           graft.streaming.GelfChunkStream.assembleDatagrams(dgrams)
-            .toDF().select(col("message").as("value")))
+            .toDF().select(col("message").as("value"), col("received")),
+          col("received"))
         .writeStream
         .format("noop")
         .option("checkpointLocation", cp.getAbsolutePath)

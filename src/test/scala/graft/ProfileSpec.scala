@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 
 import graft.tools.Profile
 
@@ -36,5 +36,15 @@ class ProfileSpec extends SparkSpec {
       assert(r.seconds.length === 2)
       assert(r.hazards.exists(_.contains("exchanges=")), r.hazards)
     }
+  }
+
+  test("compiles: the warm-up pass compiles the query's classes and the timed passes reuse them") {
+    val orders = Tables.load(spark, sf, "orders")
+    // a constant no other spec uses, so the warm-up cannot hit the cache
+    val r = Profile.run(spark, 2)(
+      orders.select(col("o_orderkey"), (col("o_totalprice") * lit(7.3190241)).as("p")))
+    assert(r.layers(0)("execute").compiles > 0L)
+    assert(r.layers.drop(1).map(_("execute").compiles) === Seq(0L, 0L))
+    assert(r.pass(0).compiles === Profile.Layers.map(r.layers(0)(_).compiles).sum)
   }
 }

@@ -18,6 +18,9 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // as GraftSession: per-query session clones share one executor
+      // class loader, so generated classes are reused across passes
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // every unpartitioned window documents the invariant that bounds

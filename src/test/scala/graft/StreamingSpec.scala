@@ -317,6 +317,49 @@ class StreamingSpec extends SparkSpec {
     assert(json.contains("\"timestamp\":1704412800000"))
   }
 
+  test("parsed: receive time is the ingest file's mtime; re-reading a file yields identical record ids") {
+    // 2025-01-01T00:00:05Z: "Dec 31" in that year is ≥3 days ahead, so
+    // the RFC 3164 stamp falls to 2024; on the query clock (a later
+    // year) it would land in a later year
+    val mtime = 1735689605000L
+    val syslog = Seq("<13>Dec 31 23:59:50 nyhost year turned", "<13>no header at all")
+    val gelfDoc = """{"version":"1.1","host":"nostamp","short_message":"chunked, no timestamp"}"""
+    val (half1, half2) = gelfDoc.splitAt(gelfDoc.length / 2)
+    def dgram(seq: Int, payload: String): Array[Byte] = {
+      val d = java.nio.ByteBuffer.allocate(12 + payload.length)
+        .put(0x1e.toByte).put(0x0f.toByte).putLong(9L)
+        .put(seq.toByte).put(2.toByte).put(payload.getBytes("UTF-8")).array()
+      s"${d.length} ".getBytes("US-ASCII") ++ d
+    }
+    val tcpIn = Files.createTempDirectory("graft_recv_tcp")
+    val udpIn = Files.createTempDirectory("graft_recv_udp")
+    for ((file, bytes) <- Seq(
+        tcpIn.resolve("tcp-0-conn-000000-00000.dat") ->
+          syslog.map(_ + "\n").mkString.getBytes("UTF-8"),
+        udpIn.resolve("udp-0-00000.dat") -> (dgram(0, half1) ++ dgram(1, half2)))) {
+      Files.write(file, bytes)
+      assert(file.toFile.setLastModified(mtime))
+    }
+    /** One spool run over both ingest dirs on fresh checkpoints:
+      * message → (record id, timestamp ms). */
+    def spoolRun(): Map[String, (String, Long)] = {
+      val spool = Files.createTempDirectory("graft_recv_spool")
+      for ((in, gelf) <- Seq(tcpIn -> false, udpIn -> true))
+        assert(SyslogPipeline.spoolDirQuery(
+          SyslogPipeline.parsed(spark, in.toString, gelf = gelf, udp = gelf),
+          spool.toString, Files.createTempDirectory("graft_recv_ck").toString)
+          .awaitTermination(60000))
+      spoolTable(spool).select("message", "id", "timestamp").collect()
+        .map(r => r.getString(0) -> ((r.getString(1), r.getLong(2)))).toMap
+    }
+    val first = spoolRun()
+    assert(first.keySet === (syslog :+ gelfDoc).toSet)
+    assert(first(syslog(0))._2 === 1735689590000L) // 2024-12-31T23:59:50Z
+    assert(first(syslog(1))._2 === mtime)           // no stamp: the file's time
+    assert(first(gelfDoc)._2 === mtime)             // reassembled: its chunks' file time
+    assert(spoolRun() === first)
+  }
+
   test("chunked GELF datagram entry parses binary headers in-stream") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.streaming.GelfChunkStream
@@ -405,7 +448,8 @@ class StreamingSpec extends SparkSpec {
       "<13>1 2024-01-05T00:00:01Z app01 authd - - - login ok 2",
       "<165>1 2024-01-05T00:00:02Z db9 postgres - - - checkpoint")
     val q = graft.streaming.SyslogPipeline.spoolDirQuery(
-      graft.streaming.SyslogPipeline.parseLines(input.toDF()), spool, cp)
+      graft.streaming.SyslogPipeline.parseLines(input.toDF(), current_timestamp()),
+      spool, cp)
     q.awaitTermination()
     val back = spark.read.format("graft-spool").load(spool)
     assert(back.count() === 3)
