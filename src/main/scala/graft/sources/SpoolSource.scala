@@ -5,8 +5,7 @@ import java.util.zip.GZIPInputStream
 import scala.collection.mutable.ArrayBuffer
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -29,7 +28,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   *   spark.read.format("graft-spool").load("/var/spool/graft")
   *
-  * One output row per logEvent, record header columns repeated.
+  * One output row per logEvent, record header columns repeated. A
+  * caller that needs only each file's header, event count, message
+  * characters, first event and size reads the `graft-spool-files`
+  * table instead ([[SpoolFilesDataSource]]): the same directory and
+  * the same streaming offsets, one row per file, from the spool
+  * writer's manifests where they exist.
   *
   * Scale design:
   *  - files are bin-packed into input partitions by cumulative size
@@ -116,7 +120,7 @@ class SpoolScanBuilder(path: String, options: CaseInsensitiveStringMap)
 
   override def build(): Scan = {
     val maxBytes = Option(options.get("maxPartitionBytes"))
-      .map(_.toLong).getOrElse(128L * 1024 * 1024)
+      .map(_.toLong).getOrElse(SpoolScan.DefaultMaxPartitionBytes)
     new SpoolScan(path, required, pushed, maxBytes)
   }
 }
@@ -132,12 +136,7 @@ class SpoolScan(path: String, required: StructType, filters: Array[Filter],
   override def estimateStatistics(): Statistics = {
     val conf = SparkSession.active.sessionState.newHadoopConf()
     val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val bytes =
-      if (!fs.exists(p)) 0L
-      else fs.listStatus(p).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".gz"))
-        .map(_.getLen).sum
+    val bytes = SpoolListing.of(p.getFileSystem(conf), p).data.map(_.getLen).sum
     new Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
         java.util.OptionalLong.of(bytes * 4)
@@ -155,23 +154,8 @@ class SpoolScan(path: String, required: StructType, filters: Array[Filter],
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = SparkSession.active.sessionState.newHadoopConf()
     val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return Array.empty
-    val files = fs.listStatus(p).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".gz"))
-      .sortBy(_.getPath.getName)
-      .map(s => (s.getPath.toString, s.getLen))
-    val parts = ArrayBuffer.empty[SpoolInputPartition]
-    val cur = ArrayBuffer.empty[String]
-    var curBytes = 0L
-    files.foreach { case (f, len) =>
-      if (cur.nonEmpty && curBytes + len > maxPartitionBytes) {
-        parts += SpoolInputPartition(cur.toArray); cur.clear(); curBytes = 0
-      }
-      cur += f; curBytes += len
-    }
-    if (cur.nonEmpty) parts += SpoolInputPartition(cur.toArray)
-    parts.toArray
+    SpoolScan.partitions(SpoolListing.of(p.getFileSystem(conf), p).data,
+      maxPartitionBytes)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -179,45 +163,57 @@ class SpoolScan(path: String, required: StructType, filters: Array[Filter],
       SerializableHadoopConf.fromSession())
 
   /** Streaming read: tail the spool directory the way the reference's
-    * drain loop does (spool.py:105-130 — list, process, remember).
-    *
-    * Two offset modes, both one compact string (no per-file seen-set
-    * to grow without bound at 100 TB):
-    *
-    *  - SEALED-EPOCH mode (directories written by the streaming
-    *    spool sink): concurrent writer tasks publish epoch files in
-    *    arbitrary name order, so a name watermark taken mid-epoch
-    *    would permanently skip any file that publishes later with a
-    *    smaller name. The sink's driver-side epoch commit — which
-    *    runs strictly after every task of the epoch has published —
-    *    drops an `epoch-NNNNNN.sealed` marker, and the offset here is
-    *    the largest SEALED epoch number (numeric, wrap-proof): a
-    *    micro-batch is whole epochs, never a slice of one.
-    *  - NAME mode (reference-style spools: one writer appending in
-    *    arrival order, like the relay's drain directory or the test
-    *    fixtures): the offset is the lexicographically-largest
-    *    processed file name and each micro-batch is the files sorting
-    *    after it — valid exactly because a single writer publishes in
-    *    name order.
-    *
-    * The mode is chosen per micro-batch by marker presence; a
-    * directory must stay in one writer family (mixing a batch
-    * writer's plain names into a sealed-epoch dir is unsupported —
-    * the names interleave unsortably).
-    *
-    * NAME mode is for single-writer, name-ordered spools ONLY. A dir
-    * being filled by the BATCH spool writer must not be tailed even
-    * on its own: batch tasks publish `part-{pid}-{tid}-{seq}.gz`
-    * concurrently and taskId is unpadded, so names do not appear in
-    * lexicographic order and a watermark taken mid-write permanently
-    * skips the files that publish later with smaller names. Drain
-    * batch-written dirs after the batch job returns (its commit is
-    * the completion marker), or produce them with the STREAMING
-    * writer, whose sealed epochs exist precisely to make concurrent
-    * publication tail-safe. */
+    * drain loop does (spool.py:105-130 — list, process, remember);
+    * offsets and micro-batches are [[SpoolTailStream]]'s. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new SpoolMicroBatchStream(path, required, filters, maxPartitionBytes)
+}
+
+object SpoolScan {
+  val DefaultMaxPartitionBytes: Long = 128L * 1024 * 1024
+
+  /** Greedy bin-pack of (file, bytes), in order, into groups of at most
+    * `maxBytes` (a larger file gets a group of its own). */
+  def binPack(files: Seq[(String, Long)], maxBytes: Long): Seq[Array[(String, Long)]] = {
+    val groups = ArrayBuffer.empty[Array[(String, Long)]]
+    val cur = ArrayBuffer.empty[(String, Long)]
+    var curBytes = 0L
+    files.foreach { case f @ (_, len) =>
+      if (cur.nonEmpty && curBytes + len > maxBytes) {
+        groups += cur.toArray; cur.clear(); curBytes = 0
+      }
+      cur += f; curBytes += len
+    }
+    if (cur.nonEmpty) groups += cur.toArray
+    groups.toSeq
+  }
+
+  /** The event table's partitions over `files`, sorted by name. */
+  def partitions(files: Seq[FileStatus], maxBytes: Long): Array[InputPartition] =
+    binPack(files.map(s => (s.getPath.toString, s.getLen)), maxBytes)
+      .map(g => SpoolInputPartition(g.map(_._1))).toArray
+}
+
+/** One listing of a spool dir: the `*.gz` data files sorted by name,
+  * the sealed epoch ids and the epoch manifests ([[SpoolManifest]]). */
+final case class SpoolListing(data: Seq[FileStatus], sealedEpochs: Set[Long],
+                              manifests: Seq[FileStatus])
+
+object SpoolListing {
+  def of(fs: FileSystem, dir: Path): SpoolListing = {
+    if (!fs.exists(dir)) return SpoolListing(Nil, Set.empty, Nil)
+    val all = fs.listStatus(dir).toSeq.filter(_.isFile)
+    def named(re: scala.util.matching.Regex) =
+      all.filter(s => re.matches(s.getPath.getName))
+    SpoolListing(
+      all.filter(_.getPath.getName.endsWith(".gz")).sortBy(_.getPath.getName),
+      all.flatMap(s => s.getPath.getName match {
+        case SpoolMicroBatchStream.SealRe(n) => Some(n.toLong)
+        case _ => None
+      }).toSet,
+      named(SpoolManifest.NameRe))
+  }
 }
 
 object SpoolMicroBatchStream {
@@ -252,12 +248,58 @@ class SpoolOffset(val watermark: String)
   override def hashCode(): Int = watermark.hashCode
 }
 
-class SpoolMicroBatchStream(path: String, required: StructType,
-                            filters: Array[Filter], maxPartitionBytes: Long)
+/** The tail of a spool directory, shared by the event table
+  * (`graft-spool`, [[SpoolMicroBatchStream]]) and the files table
+  * (`graft-spool-files`, [[SpoolFilesMicroBatchStream]]): both serve
+  * the same micro-batches of files under the same offsets, so a
+  * checkpoint written by one resumes under the other. Subclasses only
+  * turn a batch's files into input partitions (`plan`).
+  *
+  * Two offset modes, both one compact string (no per-file seen-set to
+  * grow without bound):
+  *
+  *  - SEALED-EPOCH mode (directories written by the streaming spool
+  *    sink): concurrent writer tasks publish epoch files in arbitrary
+  *    name order, so a name watermark taken mid-epoch would
+  *    permanently skip any file that publishes later with a smaller
+  *    name. The sink's driver-side epoch commit — which runs strictly
+  *    after every task of the epoch has published — drops an
+  *    `epoch-NNNNNN.sealed` marker, and the offset here is the largest
+  *    SEALED epoch number (numeric, wrap-proof): a micro-batch is
+  *    whole epochs, never a slice of one.
+  *  - NAME mode (reference-style spools: one writer appending in
+  *    arrival order, like the relay's retry directory or the test
+  *    fixtures): the offset is the lexicographically-largest
+  *    processed file name and each micro-batch is the files sorting
+  *    after it — valid exactly because a single writer publishes in
+  *    name order.
+  *
+  * The mode is chosen per micro-batch by marker presence; a directory
+  * must stay in one writer family (mixing a batch writer's plain
+  * names into a sealed-epoch dir is unsupported — the names
+  * interleave unsortably).
+  *
+  * NAME mode is for single-writer, name-ordered spools ONLY. A dir
+  * being filled by the BATCH spool writer must not be tailed even on
+  * its own: batch tasks publish `part-{pid}-{tid}-{seq}.gz`
+  * concurrently and taskId is unpadded, so names do not appear in
+  * lexicographic order and a watermark taken mid-write permanently
+  * skips the files that publish later with smaller names. Drain
+  * batch-written dirs after the batch job returns (its commit is the
+  * completion marker), or produce them with the STREAMING writer,
+  * whose sealed epochs exist precisely to make concurrent publication
+  * tail-safe. */
+abstract class SpoolTailStream(path: String)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
-  import SpoolMicroBatchStream.{EpochFileRe, EpochPrefix, SealRe}
+  import SpoolMicroBatchStream.EpochPrefix
+  import SpoolTailStream.epochOf
+
+  /** Input partitions of one micro-batch's `files` (sorted by name),
+    * from the listing that chose them. */
+  protected def plan(fs: FileSystem, files: Seq[FileStatus],
+                     listing: SpoolListing): Array[InputPartition]
 
   /** Watermark latched at query start by an AvailableNow run: the
     * drain pass serves everything up to this snapshot and NOTHING a
@@ -265,34 +307,15 @@ class SpoolMicroBatchStream(path: String, required: StructType,
     * Trigger.AvailableNow promises, and exactly the reference's
     * drain-to-current-listing pass (spool.py:105-130 lists once and
     * processes that listing; files arriving mid-drain wait for the
-    * next pass, here the next query). Without this interface every
-    * AvailableNow drain fell back to deprecated single-batch
-    * execution with MicroBatchExecution's uncommitted-batch WARN
-    * (VERDICT r15 What's-wrong #1). */
+    * next pass, here the next query). */
   @volatile private var availableNowCap: Option[String] = None
 
-  /** (data files sorted by name, sealed epoch ids) in ONE listing —
-    * offset choice and batch planning must see a consistent snapshot. */
-  private def listDir(): (Seq[(String, String, Long)], Set[Long]) = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
+  /** ONE listing per offset choice or batch plan — both must see a
+    * consistent snapshot. */
+  private def list(): (FileSystem, SpoolListing) = {
     val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return (Seq.empty, Set.empty)
-    val all = fs.listStatus(p).toSeq.filter(_.isFile)
-    val data = all
-      .filter(_.getPath.getName.endsWith(".gz"))
-      .map(s => (s.getPath.getName, s.getPath.toString, s.getLen))
-      .sortBy(_._1)
-    val sealedEpochs = all.flatMap(s => s.getPath.getName match {
-      case SealRe(n) => Some(n.toLong)
-      case _ => None
-    }).toSet
-    (data, sealedEpochs)
-  }
-
-  private def epochOf(name: String): Option[Long] = name match {
-    case EpochFileRe(n) => Some(n.toLong)
-    case _ => None
+    val fs = p.getFileSystem(SparkSession.active.sessionState.newHadoopConf())
+    (fs, SpoolListing.of(fs, p))
   }
 
   private def parseEpochMark(w: String): Long =
@@ -303,15 +326,15 @@ class SpoolMicroBatchStream(path: String, required: StructType,
 
   /** One consistent snapshot of "everything consumable right now". */
   private def snapshotLatest(): SpoolOffset = {
-    val (names, sealedEpochs) = listDir()
-    if (sealedEpochs.nonEmpty)
-      new SpoolOffset(EpochPrefix + sealedEpochs.max)
-    else if (names.exists(n => epochOf(n._1).isDefined))
+    val l = list()._2
+    if (l.sealedEpochs.nonEmpty)
+      new SpoolOffset(EpochPrefix + l.sealedEpochs.max)
+    else if (l.data.exists(s => epochOf(s.getPath.getName).isDefined))
       // epoch-named files with NO seal yet: epoch mode with nothing
       // consumable — a name watermark here would slice the in-flight
       // epoch and skip its late-publishing files forever
       new SpoolOffset(EpochPrefix + "-1")
-    else new SpoolOffset(if (names.isEmpty) "" else names.last._1)
+    else new SpoolOffset(l.data.lastOption.map(_.getPath.getName).getOrElse(""))
   }
 
   override def latestOffset(): Offset = snapshotLatest()
@@ -332,32 +355,36 @@ class SpoolMicroBatchStream(path: String, required: StructType,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val lo = start.asInstanceOf[SpoolOffset].watermark
     val hi = end.asInstanceOf[SpoolOffset].watermark
-    val (names, _) = listDir()
+    val (fs, l) = list()
     val batch =
       if (hi.startsWith(EpochPrefix)) {
         val (loE, hiE) = (parseEpochMark(lo), parseEpochMark(hi))
-        names.filter { case (n, _, _) =>
-          epochOf(n).exists(e => e > loE && e <= hiE)
-        }
-      } else names.filter { case (n, _, _) => n > lo && n <= hi }
-    val parts = ArrayBuffer.empty[SpoolInputPartition]
-    val cur = ArrayBuffer.empty[String]
-    var curBytes = 0L
-    batch.foreach { case (_, f, len) =>
-      if (cur.nonEmpty && curBytes + len > maxPartitionBytes) {
-        parts += SpoolInputPartition(cur.toArray); cur.clear(); curBytes = 0
-      }
-      cur += f; curBytes += len
-    }
-    if (cur.nonEmpty) parts += SpoolInputPartition(cur.toArray)
-    parts.toArray
+        l.data.filter(s => epochOf(s.getPath.getName).exists(e => e > loE && e <= hiE))
+      } else l.data.filter { s => val n = s.getPath.getName; n > lo && n <= hi }
+    plan(fs, batch, l)
   }
 
+  override def commit(end: Offset): Unit = ()
+  override def stop(): Unit = ()
+}
+
+object SpoolTailStream {
+  def epochOf(name: String): Option[Long] = name match {
+    case SpoolMicroBatchStream.EpochFileRe(n) => Some(n.toLong)
+    case _ => None
+  }
+}
+
+/** The event table's tail: a batch's files bin-packed by size. */
+class SpoolMicroBatchStream(path: String, required: StructType,
+                            filters: Array[Filter], maxPartitionBytes: Long)
+    extends SpoolTailStream(path) {
+  override protected def plan(fs: FileSystem, files: Seq[FileStatus],
+                              listing: SpoolListing): Array[InputPartition] =
+    SpoolScan.partitions(files, maxPartitionBytes)
   override def createReaderFactory(): PartitionReaderFactory =
     new SpoolReaderFactory(required, filters,
       SerializableHadoopConf.fromSession())
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 case class SpoolInputPartition(files: Array[String]) extends InputPartition

@@ -38,17 +38,28 @@ import org.apache.spark.sql.types._
   * cannot collide; abort() removes the task's published files (an
   * unrenamed temp from a hard crash is invisible to readers — the
   * listing filters on the `.gz` suffix).
+  *
+  * Each task counts what it flushes and returns every file's facts
+  * (log group and stream, events, message characters, first event,
+  * gzip bytes: [[SpoolFileFacts]]) in its commit message. The
+  * streaming commit publishes them as the epoch's manifest, so nothing
+  * downstream re-reads a file to learn them; a batch write publishes
+  * none, and its files are read for their facts
+  * ([[SpoolFiles.factsOf]]).
   */
 class SpoolWriteBuilder(path: String, info: LogicalWriteInfo)
     extends WriteBuilder {
   override def build(): Write = new SpoolWrite(path, info.schema(),
     Option(info.options.get("maxRecordBytes")).map(_.toLong)
       .getOrElse(graft.Constants.MaxRecordSize.toLong),
-    SerializableHadoopConf.fromSession())
+    SerializableHadoopConf.fromSession(), info.queryId())
 }
 
+/** `writer` names this write's epoch manifests ([[SpoolManifest]]): the
+  * streaming query's id, which survives restarts from its checkpoint. */
 class SpoolWrite(path: String, schema: StructType, maxRecordBytes: Long,
-                 conf: SerializableHadoopConf)
+                 conf: SerializableHadoopConf,
+                 writer: String = java.util.UUID.randomUUID().toString)
     extends Write with BatchWrite
     with org.apache.spark.sql.connector.write.streaming.StreamingWrite {
   SpoolWrite.requireWritable(schema)
@@ -79,8 +90,15 @@ class SpoolWrite(path: String, schema: StructType, maxRecordBytes: Long,
   /** Seal the epoch: runs on the DRIVER strictly after every task of
     * the epoch has published its files, so the marker's presence
     * guarantees no epoch-N file can still appear — the invariant the
-    * drain's sealed-epoch watermark rests on (SpoolMicroBatchStream).
+    * drain's sealed-epoch watermark rests on (SpoolTailStream).
     * Overwrite makes a replayed commit idempotent.
+    *
+    * Before the seal, the epoch's manifest lists every file the tasks
+    * published with its facts, as `epoch-NNNNNN.<writer>.manifest`
+    * ([[SpoolManifest]]): the drain and the stats scrape read those
+    * instead of the files. The seal is shared by every writer of the
+    * epoch number; the manifest is this writer's own, so two queries
+    * that commit the same epoch number into one dir both keep theirs.
     *
     * Restart guard: epochIds are per-checkpoint, so a query restarted
     * with a FRESH checkpoint into a non-empty spool dir starts again
@@ -100,13 +118,8 @@ class SpoolWrite(path: String, schema: StructType, maxRecordBytes: Long,
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val fs = new Path(path).getFileSystem(conf.value)
     val dir = new Path(path)
-    val maxSealed = sealHighWater.getOrElse {
-      if (!fs.exists(dir)) -1L
-      else fs.listStatus(dir).toSeq.flatMap(s => s.getPath.getName match {
-        case SpoolMicroBatchStream.SealRe(n) => Some(n.toLong)
-        case _ => None
-      }).foldLeft(-1L)(math.max)
-    }
+    val maxSealed = sealHighWater.getOrElse(
+      SpoolListing.of(fs, dir).sealedEpochs.foldLeft(-1L)(math.max))
     if (maxSealed > epochId)
       throw new IllegalStateException(
         s"graft-spool: committing epoch $epochId but $path already holds " +
@@ -114,6 +127,11 @@ class SpoolWrite(path: String, schema: StructType, maxRecordBytes: Long,
           "fresh checkpoint into a non-empty spool dir, and a sealed-epoch " +
           "drain past the old watermark would never read the new epochs. " +
           "Resume from the original checkpoint or use a fresh spool dir.")
+    val files = messages.toSeq.flatMap {
+      case c: SpoolCommit => c.files
+      case _ => Nil
+    }
+    if (files.nonEmpty) SpoolManifest.write(fs, dir, epochId, writer, files)
     val p = new Path(path, SpoolMicroBatchStream.sealName(epochId))
     val out = fs.create(p, true)
     out.close()
@@ -157,35 +175,55 @@ class SpoolWriterFactory(path: String, schema: StructType, maxRecordBytes: Long,
       namePrefix = "", conf)
 }
 
-case class SpoolCommit(files: Seq[String]) extends WriterCommitMessage
+/** A data writer's published files, each with the facts the drain and
+  * the stats scrape need ([[SpoolFileFacts]]). */
+case class SpoolCommit(files: Seq[SpoolFileFacts]) extends WriterCommitMessage
 
 class SpoolDataWriter(path: String, schema: StructType, maxRecordBytes: Long,
                       partitionId: Int, taskId: Long, namePrefix: String,
                       serConf: SerializableHadoopConf)
     extends DataWriter[InternalRow] {
 
-  private val idx = SpoolWrite.Required.map { case (n, _) =>
-    n -> schema.fieldIndex(n)
-  }.toMap
+  private val Array(ownerIdx, groupIdx, streamIdx, typeIdx, idIdx, msgIdx, tsIdx) =
+    SpoolWrite.Required.map { case (n, _) => schema.fieldIndex(n) }.toArray
   private val subsIdx = schema.fields.indexWhere(_.name == "subscription_filters")
 
   private case class Header(owner: String, group: String, stream: String,
                             msgType: String, subs: Seq[String])
-  /** Buffered event JSON fragments + their byte size, per header. */
-  private val buf = mutable.LinkedHashMap.empty[Header, (mutable.ArrayBuffer[String], Long)]
-  private val written = mutable.ArrayBuffer.empty[String]
+  /** One header's buffered event JSON fragments, the record's UTF-8
+    * size so far (rendered envelope included) and the facts its file
+    * will carry. */
+  private final class Pending(val envelopeBytes: Long) {
+    val events = mutable.ArrayBuffer.empty[String]
+    var bytes: Long = envelopeBytes
+    var chars = 0L
+    var firstEvent = Long.MaxValue
+    var hasTimestamp = false
+  }
+  private val buf = mutable.LinkedHashMap.empty[Header, Pending]
+  private val written = mutable.ArrayBuffer.empty[SpoolFileFacts]
   private var seq = 0
   private val conf: Configuration = serConf.value
 
+  private def needsEscape(c: Char): Boolean = c == '"' || c == '\\' || c < ' '
+
+  /** `s` itself when nothing in it needs escaping. */
   private def jsonEscape(s: String): String = {
-    val sb = new StringBuilder(s.length + 8)
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
+    var i = 0
+    while (i < s.length && !needsEscape(s.charAt(i))) i += 1
+    if (i == s.length) s
+    else {
+      val sb = new java.lang.StringBuilder(s.length + 8).append(s, 0, i)
+      while (i < s.length) {
+        val c = s.charAt(i)
+        if (c == '"') sb.append("\\\"")
+        else if (c == '\\') sb.append("\\\\")
+        else if (c < ' ') sb.append(f"\\u${c.toInt}%04x")
+        else sb.append(c)
+        i += 1
+      }
+      sb.toString
     }
-    sb.toString
   }
 
   /** JSON string or literal null (Spark's append path fills columns
@@ -193,38 +231,61 @@ class SpoolDataWriter(path: String, schema: StructType, maxRecordBytes: Long,
   private def jstr(s: String): String =
     if (s == null) "null" else "\"" + jsonEscape(s) + "\""
 
-  override def write(row: InternalRow): Unit = {
-    def str(name: String): String = {
-      val i = idx(name)
-      if (row.isNullAt(i)) null else row.getUTF8String(i).toString
+  /** `s.getBytes("UTF-8").length` without the copy (an unpaired
+    * surrogate encodes as one replacement byte there too). */
+  private def utf8Length(s: String): Long = {
+    var n = 0L
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      n += (if (c < 0x80) 1
+        else if (c < 0x800) 2
+        else if (Character.isHighSurrogate(c) && i + 1 < s.length &&
+            Character.isLowSurrogate(s.charAt(i + 1))) { i += 1; 4 }
+        else if (Character.isSurrogate(c)) 1
+        else 3)
+      i += 1
     }
+    n
+  }
+
+  override def write(row: InternalRow): Unit = {
+    def str(i: Int): String =
+      if (row.isNullAt(i)) null else row.getUTF8String(i).toString
     val subs =
       if (subsIdx < 0 || row.isNullAt(subsIdx)) Seq.empty[String]
       else {
         val a = row.getArray(subsIdx)
         (0 until a.numElements()).map(i => a.getUTF8String(i).toString)
       }
-    val h = Header(str("owner"), str("log_group"), str("log_stream"),
-      str("message_type"), subs)
-    val ts = if (row.isNullAt(idx("timestamp"))) "null"
-      else row.getLong(idx("timestamp")).toString
-    val ev = s"""{"id":${jstr(str("id"))},""" +
-      s""""message":${jstr(str("message"))},"timestamp":$ts}"""
+    val h = Header(str(ownerIdx), str(groupIdx), str(streamIdx),
+      str(typeIdx), subs)
+    val message = str(msgIdx)
+    val hasTs = !row.isNullAt(tsIdx)
+    val ts = if (hasTs) row.getLong(tsIdx) else 0L
+    val ev = s"""{"id":${jstr(str(idIdx))},""" +
+      s""""message":${jstr(message)},"timestamp":${if (hasTs) ts.toString else "null"}}"""
     // size in UTF-8 BYTES (non-ASCII payloads are up to 4 bytes/char —
     // char counting would let a buffer serialize past the cap), and
     // the buffer starts at the rendered envelope's size so the
     // flushed record NEVER exceeds maxRecordBytes, wrapper included
-    val evBytes = ev.getBytes("UTF-8").length.toLong
-    val (events, bytes) =
-      buf.getOrElseUpdate(h, (mutable.ArrayBuffer.empty, envelopeBytes(h)))
+    val evBytes = utf8Length(ev)
+    var p = buf.getOrElseUpdate(h, new Pending(envelopeBytes(h)))
     // flush-before-append keeps every record under the cap (the
     // reference sizes the gzipped record; uncompressed JSON is the
-    // deterministic, strictly-conservative bound)
-    if (events.nonEmpty && bytes + evBytes + 1 > maxRecordBytes) flush(h)
-    val (events2, bytes2) =
-      buf.getOrElseUpdate(h, (mutable.ArrayBuffer.empty, envelopeBytes(h)))
-    events2 += ev
-    buf(h) = (events2, bytes2 + evBytes + 1)
+    // deterministic, strictly-conservative bound); the header then
+    // re-enters the buffer last, as a new one would
+    if (p.events.nonEmpty && p.bytes + evBytes + 1 > maxRecordBytes) {
+      flush(h, p)
+      p = new Pending(p.envelopeBytes)
+      buf.put(h, p)
+    }
+    p.events += ev
+    p.bytes += evBytes + 1
+    // code points of the decoded message: what `length(message)`
+    // counts on the read-back
+    if (message != null) p.chars += message.codePointCount(0, message.length)
+    if (hasTs) { p.hasTimestamp = true; p.firstEvent = math.min(p.firstEvent, ts) }
   }
 
   private def render(h: Header, eventsJson: String): String = {
@@ -238,9 +299,10 @@ class SpoolDataWriter(path: String, schema: StructType, maxRecordBytes: Long,
   private def envelopeBytes(h: Header): Long =
     render(h, "").getBytes("UTF-8").length.toLong
 
-  private def flush(h: Header): Unit = buf.remove(h).foreach { case (events, _) =>
-    if (events.nonEmpty) {
-      val record = render(h, events.mkString(","))
+  private def flush(h: Header, p: Pending): Unit = {
+    buf.remove(h)
+    if (p.events.nonEmpty) {
+      val record = render(h, p.events.mkString(","))
       val name = f"${namePrefix}part-$partitionId%05d-$taskId-$seq%05d.gz"
       seq += 1
       val bos = new ByteArrayOutputStream()
@@ -257,18 +319,19 @@ class SpoolDataWriter(path: String, schema: StructType, maxRecordBytes: Long,
       try out.write(bos.toByteArray) finally out.close()
       if (!fs.rename(tmp, fin))
         throw new java.io.IOException(s"spool publish failed: $tmp -> $fin")
-      written += fin.toString
+      written += SpoolFileFacts(name, h.group, h.stream, p.events.size.toLong,
+        p.chars, if (p.hasTimestamp) Some(p.firstEvent) else None, bos.size.toLong)
     }
   }
 
   override def commit(): WriterCommitMessage = {
-    buf.keys.toSeq.foreach(flush)
+    buf.toSeq.foreach { case (h, p) => flush(h, p) }
     SpoolCommit(written.toSeq)
   }
 
   override def abort(): Unit = {
     written.foreach { f =>
-      val p = new Path(f)
+      val p = new Path(path, f.file)
       p.getFileSystem(conf).delete(p, false); ()
     }
   }

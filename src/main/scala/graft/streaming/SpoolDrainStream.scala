@@ -7,20 +7,26 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming Firehose drain (SURVEY §2 #87) — the reference uploader
   * loop (spool.py:105-130 + 199-211) as a streaming query over the
-  * spool directory: `readStream.format("graft-spool")` tails the
-  * spool exactly as the drain thread polls it, and each micro-batch's
-  * records are packed into put-record batches under the SAME ≤ count
-  * / ≤ bytes caps with the SAME oracle-verified greedy fold the batch
-  * operator uses ([[graft.operators.Envelope.packRecords]]).
+  * spool directory: `readStream.format("graft-spool-files")` tails the
+  * spool exactly as the drain thread polls it, one row per spool file,
+  * and each micro-batch's records are packed into put-record batches
+  * under the SAME ≤ count / ≤ bytes caps with the SAME oracle-verified
+  * greedy fold the batch operator uses
+  * ([[graft.operators.Envelope.packRecords]]).
   *
-  * Record sizes come from the spool files' on-disk byte lengths (the
-  * reference packs by gzip size, sink.py:179), looked up with ONE
-  * directory listing per micro-batch — the uploader's metadata poll,
-  * bounded by files-per-trigger, never a data scan. The drain log
-  * appends one row per put batch; at-least-once across restarts comes
-  * from the source's checkpointed file-name watermark (a record never
-  * re-enters a later micro-batch, matching the reference's unlink-
-  * after-success contract).
+  * A record's destination, source, first event and size (the spool
+  * file's gzip bytes: the reference packs by gzip size, sink.py:179)
+  * come from the spool writer's epoch manifests — facts the writer
+  * recorded when it flushed the file — so a micro-batch reads no event.
+  * Only files no manifest lists (the retry dir, batch-written dirs,
+  * seals written before manifests existed) are opened, once each
+  * ([[graft.sources.SpoolFiles.factsOf]]); a file without events ships
+  * nothing. The drain log appends one row per put batch; at-least-once
+  * across restarts comes from the source's checkpointed watermark,
+  * which is the `graft-spool` event table's, so a checkpoint written
+  * over that table resumes here (a record never re-enters a later
+  * micro-batch, matching the reference's unlink-after-success
+  * contract).
   */
 object SpoolDrainStream {
 
@@ -58,35 +64,22 @@ object SpoolDrainStream {
                 // doubles as the stream name). Must be serializable —
                 // it ships in the task closure.
                 streamFor: String => String = identity): StreamingQuery =
-    spark.readStream.format("graft-spool").load(spoolDir)
-      .select("log_group", "log_stream", "src_file", "timestamp")
+    spark.readStream.format("graft-spool-files").load(spoolDir)
+      .where(col("events") > 0)
+      .select(col("log_stream").as("source"), col("log_group").as("dest"),
+        col("file").as("part_id"), col("bytes").as("part_bytes"),
+        col("first_event"))
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sess = batch.sparkSession
+      .foreachBatch { (records: DataFrame, batchId: Long) =>
+        val sess = records.sparkSession
         import sess.implicits._
         // stable across replays of this micro-batch, distinct across
         // queries: the transport's idempotency key component
         val attempt =
           f"q${math.abs(checkpointDir.hashCode.toLong)}%x-mb$batchId"
-        val files = batch
-          .withColumn("fname", element_at(split(col("src_file"), "/"), -1))
-          .groupBy("fname")
-          .agg(first("log_group").as("dest"),
-            first("log_stream").as("source"),
-            min("timestamp").as("first_event"))
-        val p = new Path(spoolDir)
-        val fs = p.getFileSystem(sess.sparkContext.hadoopConfiguration)
-        val sizes = fs.listStatus(p).toSeq
-          .filter(_.getPath.getName.endsWith(".gz"))
-          .map(s => (s.getPath.getName, s.getLen))
-        val sizeDf = sizes.toDF("fname", "part_bytes")
-        val records = files.join(broadcast(sizeDf), Seq("fname"))
-          .select(col("source"), col("dest"),
-            col("fname").as("part_id"), col("part_bytes"),
-            col("first_event"))
         // pack, then ship one task per batch; array_sort pins the
         // in-batch record order (collect_list order is not
         // deterministic, ship order must be)
@@ -122,6 +115,7 @@ object SpoolDrainStream {
           // re-spool failures for the next drain generation; only
           // failed NAMES cross to the driver
           val failed = statuses.filter(s => !s.ok).map(_.part_id).collect()
+          val fs = new Path(spoolDir).getFileSystem(sess.sparkContext.hadoopConfiguration)
           failed.foreach { pid =>
             val (_, gen) = BatchTransport.parseRetry(pid)
             if (gen < maxRetries) {

@@ -3,10 +3,11 @@ package graft.tools
 import java.io.File
 
 import graft.RelayConfig
-import graft.sources.SocketIngest
+import graft.sources.{SocketIngest, SpoolFactsCache}
 import graft.streaming.{BatchTransport, FilesystemTransport, SpoolDrainStream, SyslogPipeline}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The one-command relay runner (reference init.py:148-280 `listen` +
   * commands.py CLI): assembles the already-spec-proven components —
@@ -33,8 +34,10 @@ import org.apache.spark.sql.functions._
   *    reference's actual semantics (proxy.wrap rewrites peername,
   *    proxy.py:118-215; sink.py:163) — not merely header stripping
   *  - `--prometheus-port` → [[StatsServer]] serving live per-stream
-  *    counters aggregated FROM THE SPOOL (the reference's StatsSink
-  *    counts at the same point: messages that reached the sink)
+  *    counters of what reached THE SPOOL (the reference's StatsSink
+  *    counts at the same point: messages that reached the sink),
+  *    summed on the driver from the spool writer's manifests — a
+  *    scrape runs no Spark job
   *  - spool → drain → Firehose (`--stream`) → the graft-spool sink +
   *    [[SpoolDrainStream.shipQuery]] through a pluggable
   *    [[BatchTransport]]. `main` uses [[FilesystemTransport]] — this
@@ -200,28 +203,33 @@ object RelayMain {
       (tcp ++ udp).mkString("\n")
     }
 
+    private val spoolFacts =
+      new SpoolFactsCache(config.spoolDir, spark.sessionState.newHadoopConf())
+
     /** Prometheus exposition over the live spool: per-(group, stream)
-      * message counts/bytes — the reference's StatsSink counts at the
-      * same point (messages that reached the sink) — prefixed with the
-      * listener gauges so one scrape sees both the front door and the
-      * sink. */
+      * message counts (events) and bytes (message characters, what
+      * `length(message)` counts) — the reference's StatsSink counts at
+      * the same point (messages that reached the sink) — prefixed with
+      * the listener gauges so one scrape sees both the front door and
+      * the sink. The counters are sums of every spool file's facts
+      * ([[SpoolFactsCache]]): one directory listing per scrape, each
+      * manifest read once, no Spark job. */
     def metricsText(): String = {
-      val spooled = spark.read.format("graft-spool").load(config.spoolDir)
+      val byStream = spoolFacts.facts()
+        .groupMapReduce(f => (f.logGroup, f.logStream))(f => (f.events, f.chars)) {
+          case ((n1, b1), (n2, b2)) => (n1 + n2, b1 + b2)
+        }
+      // Spark's row order: nulls first, strings by UTF-8 bytes
+      val key: String => Option[UTF8String] = s => Option(s).map(UTF8String.fromString)
       // stream label = the group's resolved delivery stream: a
       // multi-stream relay's per-stream counters separate on the
-      // same rule the drain routes by (driver-side map over the
-      // already-collapsed group rows — no UDF in a Spark plan)
-      val sink = spooled
-        .groupBy("log_group", "log_stream")
-        .agg(count(lit(1)).as("n"),
-          sum(length(col("message")).cast("long")).as("b"))
-        .orderBy("log_group", "log_stream")
-        .collect().map { r =>
-          val (g, s) = (r.getString(0), r.getString(1))
+      // same rule the drain routes by
+      val sink = byStream.toSeq.sortBy { case ((g, s), _) => (key(g), key(s)) }
+        .map { case ((g, s), (n, b)) =>
           val stream = config.streamForGroup(g)
-          s"""kinesyslog_message_count_total{group="$g",source="$s",stream="$stream"} ${r.getLong(2)}""" +
+          s"""kinesyslog_message_count_total{group="$g",source="$s",stream="$stream"} $n""" +
             "\n" +
-            s"""kinesyslog_message_bytes_total{group="$g",source="$s",stream="$stream"} ${r.getLong(3)}"""
+            s"""kinesyslog_message_bytes_total{group="$g",source="$s",stream="$stream"} $b"""
         }.mkString("\n")
       val listeners = listenerMetricsText()
       if (listeners.isEmpty) sink else listeners + "\n" + sink

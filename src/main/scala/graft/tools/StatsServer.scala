@@ -19,10 +19,12 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
   * a streaming deployment passes its own thunk (e.g. over the
   * accumulated drain log).
   *
-  * The render thunk runs a Spark job per scrape: exposition output is
-  * bounded (one line per metric series — hundreds, not data-scale),
-  * and Prometheus scrape intervals are seconds-to-minutes, so this is
-  * a diagnostics surface, never a data-path collect.
+  * `serve`'s render thunk runs a Spark job per scrape: exposition
+  * output is bounded (one line per metric series — hundreds, not
+  * data-scale), and Prometheus scrape intervals are
+  * seconds-to-minutes, so this is a diagnostics surface, never a
+  * data-path collect. The relay's thunk (`RelayMain.Relay.metricsText`)
+  * runs none: it sums the spool writer's manifests on the driver.
   */
 final class StatsServer(port: Int, render: () => String) {
   private var server: HttpServer = _
